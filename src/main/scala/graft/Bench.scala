@@ -1055,7 +1055,7 @@ object Bench {
       }
       (n, "{" + sb.toString + "}")
     }
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${compactQs._2},"sf":"$sfDir","queries_truncated":true,"queries_in_line":${compactQs._1},"n_queries":${results.size},"n_errors":${errors.distinct.size},"worst_query":"$worstName","worst_delta":${jnum(worstDelta)},"reps":$reps,"cpus":$cpus,"superlinear":${sf1Field("superlinear")},"superlinear_build":${sf1Field("superlinear_build")},"failed":${sf1Field("failed")},"bench_file":"$benchOut"}""")
+    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${compactQs._2},"sf":"$sfDir","queries_truncated":${compactQs._1 < results.size},"queries_in_line":${compactQs._1},"n_queries":${results.size},"n_errors":${errors.distinct.size},"worst_query":"$worstName","worst_delta":${jnum(worstDelta)},"reps":$reps,"cpus":$cpus,"superlinear":${sf1Field("superlinear")},"superlinear_build":${sf1Field("superlinear_build")},"failed":${sf1Field("failed")},"bench_file":"$benchOut"}""")
     spark.stop()
   }
 }

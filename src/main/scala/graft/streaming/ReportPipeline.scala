@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -108,18 +108,31 @@ object ReportPipeline {
     *
     * Per batch (generation id = the Spark batch id, so replays land on
     * the same generation):
-    *  1. STAGE: bucket the incoming rows, read back ONLY the affected
-    *     buckets' CURRENT generation dirs (bounded: the affected list
-    *     is <= nBuckets ints), anti-join out updated keys, union the
-    *     new rows, write one partitionBy job into `_stage/`, and
-    *     rename each staged bucket dir to `data/bucket=b/gen=N`.
-    *     Readers keep resolving the OLD manifest throughout.
-    *  2. COMMIT: write manifest gen-N once (tmp + rename to a NEW
+    *  1. MATERIALISE: execute the batch's plan once (an eager
+    *     `localCheckpoint`); every later step, and the caller of
+    *     [[write]], reads that copy. Under `foreachBatch` the plan is
+    *     the windowed aggregate's whole incremental execution: source
+    *     read, parse, partial aggregate, shuffle, state restore, save
+    *     and commit. A `foreachBatch` body must execute a stateful
+    *     frame EXACTLY once: zero executions skip the state commit
+    *     the next trigger restores from, and each further action
+    *     re-runs restore/save/commit (and inflates the progress's
+    *     state metrics by that factor). Empty and no-data batches
+    *     execute too — watermark eviction happens there.
+    *  2. STAGE: bucket the rows, read back ONLY the affected buckets'
+    *     CURRENT generation dirs (with the batch's schema, so no
+    *     inference job; bounded: the affected list is <= nBuckets
+    *     ints), anti-join out updated keys, union the new rows, write
+    *     one partitionBy job into `_stage/` — repartitioned by bucket,
+    *     so each bucket generation is one file — and rename each
+    *     staged bucket dir to `data/bucket=b/gen=N`. Readers keep
+    *     resolving the OLD manifest throughout.
+    *  3. COMMIT: write manifest gen-N once (tmp + rename to a NEW
     *     name — an atomic create). Readers resolve "current" as the
     *     highest committed manifest, so a reader racing the merge
     *     observes all-old or all-new, never a mix (proven by
     *     DurableUpsertSpec's staged-visibility + racing-reader tests).
-    *  3. GC: drop each affected bucket's generations OLDER than the
+    *  4. GC: drop each affected bucket's generations OLDER than the
     *     one the prior manifest pinned (the prior generation itself is
     *     kept for readers that resolved the manifest list just before
     *     the commit — the AnnIngest invalidation posture: readers may
@@ -227,18 +240,29 @@ object ReportPipeline {
           b.toInt -> bg.toLong
         }.toMap).getOrElse(Map.empty)
 
+    private def bucketOf: Column =
+      pmod(hash(col("wstart"), col("type"), col("area")), lit(nBuckets))
+
     /** Phase 1: write the merged affected-bucket generations to their
       * final dirs. Readers still resolve the old manifest — nothing
       * is visible until [[commit]] flips the pointer. */
-    private[graft] def stage(batch: DataFrame, batchId: Long): Option[StagedUpsert] = {
+    private[graft] def stage(batch: DataFrame, batchId: Long): Option[StagedUpsert] =
+      stageOnce(batch, batchId)._2
+
+    /** [[stage]], also returning the batch as materialised by its one
+      * execution — what every later use of the batch must read. */
+    private def stageOnce(batch: DataFrame, batchId: Long): (DataFrame, Option[StagedUpsert]) = {
       val s = batch.sparkSession
       val fs = fsOf(s)
       checkLayout(fs)
-      val withBucket = batch.withColumn("bucket",
-        pmod(hash(col("wstart"), col("type"), col("area")), lit(nBuckets)))
+      // the batch's ONE execution: in foreachBatch this runs the
+      // stateful plan (restore, update, evict, commit) — also on an
+      // empty batch, whose commit the next trigger restores from
+      val rows = batch.localCheckpoint(true)
+      val withBucket = rows.withColumn("bucket", bucketOf)
       val affected = withBucket.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSet
-      if (affected.isEmpty) return None
+      if (affected.isEmpty) return (rows, None)
       val priorGen = currentGen(fs)
       // generation ids are Spark batch ids and "current" = max
       // manifest, so a batch id BELOW the committed maximum means the
@@ -260,22 +284,24 @@ object ReportPipeline {
       // resolving, for no state change
       val toWrite = affected.filterNot(b => priorManifest.get(b).contains(batchId))
       if (toWrite.nonEmpty) {
+        // every dir read here is a generation BELOW batchId (toWrite
+        // drops buckets pinned at it), and the write goes to _stage/
+        // then renames to gen=batchId — no dir feeds the plan that
+        // replaces it, so the merged frame needs no lineage cut. The
+        // stored schema IS the batch schema: no inference job.
         val baseDirs = toWrite.toSeq.flatMap(b =>
           priorManifest.get(b).map(g => bucketDir(b, g).toString))
         val base =
           if (baseDirs.isEmpty) None
-          else Some(s.read.parquet(baseDirs: _*)
-            .join(withBucket.select(col("wstart"), col("type"), col("area")),
+          else Some(s.read.schema(rows.schema).parquet(baseDirs: _*)
+            .join(rows.select(col("wstart"), col("type"), col("area")),
               Seq("wstart", "type", "area"), "left_anti")
-            .withColumn("bucket",
-              pmod(hash(col("wstart"), col("type"), col("area")), lit(nBuckets))))
+            .withColumn("bucket", bucketOf))
         val merged = base.map(_.unionByName(withBucket)).getOrElse(withBucket)
           .filter(col("bucket").isin(toWrite.toSeq: _*))
-        // cut lineage before the write — a replayed generation's
-        // staged output may replace a dir that feeds this very plan
-        val materialized = merged.localCheckpoint(true)
         val stageDir = new Path(new Path(root, "_stage"), s"gen-$batchId")
-        materialized.write.mode("overwrite")
+        // one task per bucket: one file per bucket generation
+        merged.repartition(col("bucket")).write.mode("overwrite")
           .partitionBy("bucket").parquet(stageDir.toString)
         for (b <- toWrite) {
           val src = new Path(stageDir, s"bucket=$b")
@@ -292,8 +318,8 @@ object ReportPipeline {
         }
         fs.delete(stageDir, true)
       }
-      Some(StagedUpsert(batchId, priorManifest ++ affected.map(_ -> batchId),
-        priorGen, priorManifest, affected))
+      (rows, Some(StagedUpsert(batchId, priorManifest ++ affected.map(_ -> batchId),
+        priorGen, priorManifest, affected)))
     }
 
     /** Phase 2: the atomic commit — ONE write-once manifest file
@@ -337,8 +363,15 @@ object ReportPipeline {
       }
     }
 
-    def write(batch: DataFrame, batchId: Long): Unit =
-      stage(batch, batchId).foreach(commit(batch.sparkSession, _))
+    /** Merge one micro-batch ([[stage]] then [[commit]]). Returns the
+      * batch as materialised by its one execution: a caller that uses
+      * the batch again must read the returned frame, because each
+      * action on a `foreachBatch` frame re-runs its stateful plan. */
+    def write(batch: DataFrame, batchId: Long): DataFrame = {
+      val (rows, staged) = stageOnce(batch, batchId)
+      staged.foreach(commit(batch.sparkSession, _))
+      rows
+    }
 
     /** The committed table as a DataFrame — resolves the newest
       * committed manifest ONCE, so the read is a consistent
@@ -453,17 +486,21 @@ object ReportPipeline {
       val hadoopConf = batch.sparkSession.sessionState.newHadoopConf()
       if (restoredOnce.compareAndSet(false, true)) restore(hadoopConf)
       val wm = maxTsMicros.get()
-      // one persist, two actions (late filter + max), one computation
-      // of the parse subtree per micro-batch
-      val cached = batch.persist()
-      try {
+      val tsUs = unix_micros(col("ts"))
+      // one pass over the batch: the late branch's action also yields
+      // the batch max (and the late count) through an observation
+      val batchMax: Option[Long] =
         // no watermark yet (first batch): nothing can be late — and
         // wm - 40s would underflow Long.MinValue into "everything late"
-        if (wm != Long.MinValue) {
-          val lateDf = cached
-            .withColumn("wend",
-              (expr(s"unix_micros(ts) div $windowUs") + 1) * windowUs)
-            .filter(col("wend") <= wm - 40L * 1000000)
+        if (wm == Long.MinValue)
+          Option(batch.agg(max(tsUs)).head().get(0)).map(_.asInstanceOf[Long])
+        else {
+          val late = (expr(s"unix_micros(ts) div $windowUs") + 1) * windowUs <=
+            wm - 40L * 1000000
+          val seen = Observation(s"late_router_$batchId")
+          val lateDf = batch
+            .observe(seen, max(tsUs).as("max"), count_if(late).as("late"))
+            .filter(late)
             .select(concat_ws("\t",
               date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
               col("type"), col("area")).as("line"))
@@ -473,24 +510,23 @@ object ReportPipeline {
             // not land on the driver); one overwritten subdir per
             // batch id keeps replays idempotent
             case Some(p) =>
+              val dir = new org.apache.hadoop.fs.Path(s"$p/batch_id=$batchId")
+              lateDf.write.mode("overwrite").parquet(dir.toString)
               // skip empty batches: a long-running stream with rare
               // late data must not accumulate one tiny dir per batch
-              if (!lateDf.isEmpty)
-                lateDf.write.mode("overwrite").parquet(s"$p/batch_id=$batchId")
+              if (seen.get("late") == 0L) dir.getFileSystem(hadoopConf).delete(dir, true)
             case None =>
               lateDf.collect().foreach(lateSink)
           }
+          Option(seen.get("max")).map(_.asInstanceOf[Long])
         }
-        val batchMax = cached.agg(max(unix_micros(col("ts")))).collect()
-          .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-        batchMax.foreach { m =>
-          val advanced = maxTsMicros.getAndUpdate(cur => math.max(cur, m)) < m
-          // durable watermark: written AFTER the late branch (a crash
-          // between the two re-reports some lates on replay — at-least
-          // -once, never silently dropped), only when it advanced
-          if (advanced) persist(hadoopConf)
-        }
-      } finally cached.unpersist()
+      batchMax.foreach { m =>
+        val advanced = maxTsMicros.getAndUpdate(cur => math.max(cur, m)) < m
+        // durable watermark: written AFTER the late branch (a crash
+        // between the two re-reports some lates on replay — at-least
+        // -once, never silently dropped), only when it advanced
+        if (advanced) persist(hadoopConf)
+      }
     }
   }
 
@@ -520,13 +556,14 @@ object ReportPipeline {
       // checkpoint — throwing here is exactly the crash window the
       // exactly-once claim must survive. Receives the batch frame so
       // the injector can target data-carrying batches (watermark
-      // advancement schedules empty batches too).
+      // advancement schedules empty batches too) — the frame the sink
+      // materialised, so reading it does not re-run the stateful plan.
       afterBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
     aggregate(ReportJob.parse(lines)).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch((df: DataFrame, id: Long) => { sink.write(df, id); afterBatch(df, id) })
+      .foreachBatch((df: DataFrame, id: Long) => afterBatch(sink.write(df, id), id))
       .start()
 
   /** Start the late-record side-output query. */

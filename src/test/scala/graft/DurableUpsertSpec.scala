@@ -279,4 +279,98 @@ class DurableUpsertSpec extends SparkSpec {
     assert(snap(k1) == (3L, "2018-01-01 10:00:09"))
     assert(snap(("2018-01-01 10:00:30", "shelf", "AREA_US")) == (1L, "2018-01-01 10:00:30"))
   }
+
+  test("one file per bucket generation: each staged bucket is written by one task") {
+    val table = tmpDir() + "/report"
+    val sink = new ReportPipeline.DurableKeyedUpsertSink(table, nBuckets = 16)
+    val rows0 = (0 until 40).map(i =>
+      (f"2018-01-01 10:$i%02d:00", Seq("shelf", "black", "seach")(i % 3),
+        "AREA_US", 1L, "t0"))
+    // spread over every input partition, so an unshuffled write would
+    // open a writer per (task, bucket) pair
+    sink.write(mkBatch(rows0).repartition(4), 0L)
+    // batch 1 merges half the keys with the generation-0 rows
+    sink.write(mkBatch(rows0.take(20).map { case (w, t, a, _, _) => (w, t, a, 2L, "t1") })
+      .repartition(4), 1L)
+    val gens = new java.io.File(table, "data").listFiles()
+      .filter(_.getName.startsWith("bucket=")).flatMap(_.listFiles())
+    assert(gens.exists(_.getName == "gen=0") && gens.exists(_.getName == "gen=1"))
+    for (g <- gens) {
+      val files = g.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1,
+        s"${g.getParentFile.getName}/${g.getName} holds ${files.length} parquet files")
+    }
+    assert(sink.snapshot(spark).size == 40)
+  }
+
+  test("the aggregate's stateful plan executes once per trigger (state metrics are not multiplied)") {
+    implicit val sq = spark.sqlContext
+    val input = MemoryStream[String]
+    val sink = new ReportPipeline.DurableKeyedUpsertSink(tmpDir() + "/report")
+    val q = ReportPipeline.startAggDurable(
+      input.toDF().withColumnRenamed("value", "line"), tmpDir(), sink)
+    val t0 = java.time.LocalDateTime.parse("2018-01-01T10:00:00")
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val types = Seq("shelf", "black", "seach")
+    val areas = Seq("AREA_US", "AREA_CT")
+    // batch k: ten on-time records from t0 + 50k s, 3 s apart, plus
+    // (k > 0) one record 25 s behind that start, within the lateness
+    // bound, which updates a window an earlier batch opened. Each
+    // batch's start is past the last one's 40 s watermark, so windows
+    // are evicted as the batches go, and no record is dropped late.
+    val batches: Seq[Seq[(Long, String, String)]] = (0 until 4).map { k =>
+      val onTime = (0 until 10).map(i => (50L * k + 3L * i, types(i % 3), areas(i % 2)))
+      if (k == 0) onTime else onTime :+ ((50L * k - 25, types(0), areas(0)))
+    }
+    def line(r: (Long, String, String)) =
+      s"""{"dt":"${t0.plusSeconds(r._1).format(fmt)}","type":"${r._2}","username":"u","area":"${r._3}"}"""
+    batches.foreach { b => input.addData(b.map(line): _*); q.processAllAvailable() }
+    q.stop()
+
+    // keys the state holds after data batch k: every window seen so far
+    // whose end is past the batch's watermark (the max event time of
+    // the batches before it, less 40 s)
+    def live(k: Int): Int = {
+      val wm = if (k == 0) Long.MinValue else batches.take(k).flatten.map(_._1).max - 40
+      batches.take(k + 1).flatten.map { case (t, tp, a) => (t / 30 * 30, tp, a) }
+        .distinct.count { case (w, _, _) => w + 30 > wm }
+    }
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val progress = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
+    val data = progress.filter(_.numInputRows > 0)
+    assert(data.map(_.numInputRows) == batches.map(_.size.toLong))
+    assert(live(3) < batches.flatten.map { case (t, tp, a) => (t / 30, tp, a) }.distinct.size,
+      "the input must evict windows")
+    for ((p, k) <- data.zipWithIndex) {
+      val st = p.stateOperators.head
+      assert(st.numRowsTotal == live(k), s"batch ${p.batchId}: state rows")
+      assert(st.numRowsDroppedByWatermark == 0, s"batch ${p.batchId}: dropped rows")
+    }
+    for (p <- progress)
+      assert(p.stateOperators.head.numStateStoreInstances == parts,
+        s"batch ${p.batchId}: state store instances")
+  }
+
+  test("late router: an empty late branch leaves no dir; its observed max still advances the watermark") {
+    import org.apache.spark.sql.functions._
+    val lateDir = tmpDir() + "/late"
+    val router = new ReportPipeline.LateRouter(
+      _ => fail("driver-side sink must not be used when latePath is set"),
+      latePath = Some(lateDir))
+    def batch(ts: String*) = ts.toSeq.toDF("s")
+      .select(to_timestamp(col("s")).as("ts"), lit("shelf").as("type"),
+        lit("AREA_US").as("area"))
+    router.route(batch("2018-01-01 10:02:00"), 0L)
+    // no record of batch 1 is late, but its max advances the watermark
+    router.route(batch("2018-01-01 10:01:59", "2018-01-01 10:03:00"), 1L)
+    // an empty batch: the observed max is null and nothing is written
+    router.route(batch(), 2L)
+    for (b <- 1 to 2) assert(!new java.io.File(s"$lateDir/batch_id=$b").exists,
+      s"the empty late branch of batch $b left a dir behind")
+    // 10:01:45 (window end 10:02:00) is late only against batch 1's
+    // max: 10:03:00 - 40 s, not 10:02:00 - 40 s
+    router.route(batch("2018-01-01 10:01:45"), 3L)
+    assert(spark.read.parquet(s"$lateDir/batch_id=3").collect().map(_.getString(0)).toSeq ==
+      Seq("2018-01-01 10:01:45\tshelf\tAREA_US"))
+  }
 }
