@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev-only plan-evidence dump (the `docs/PLANS.md` regeneration
-  * main, the [[TimeProbe]] sibling): prints the executed-plan
+  * main, the [[QProbe]] sibling): prints the executed-plan
   * `explain(FormattedMode)` of the named queries.
   *
   * Usage: `sbt "runMain graft.PlanDump <sfDir> q_a,q_b"`. */

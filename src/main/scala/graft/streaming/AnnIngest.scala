@@ -73,35 +73,30 @@ object AnnIngest {
         s.emptyDataFrame
           .select(lit(0L).as("vec_id"), lit(0L).as("cell")).limit(0),
         "cell", IndexBuckets, table)
-    val query = newVecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = df.localCheckpoint(true)
-        val sb = batch.sparkSession // the micro-batch session
-        val assigned = assignBatch(batch, cent).localCheckpoint(true)
-        // relation-cache hygiene: a session caches a table's file
-        // listing at first resolution, so BOTH reads around an append
-        // from another session go stale — refresh the replay-guard
-        // read before the anti-join, and the caller's session after
-        // the write (else a restarted guard re-appends and external
-        // readers see an empty index)
-        sb.catalog.refreshTable(table)
-        assigned
-          .join(sb.table(table).select(col("vec_id")), Seq("vec_id"), "left_anti")
-          .write.mode("append").bucketBy(IndexBuckets, "cell").sortBy("cell")
-          .saveAsTable(table)
-        // fold append accretion back to one file per bucket on the
-        // shared gate cadence (compaction preserves the bucket spec,
-        // so search-side pruned reads keep planning pruned)
-        if (id > 0 && id % CompactEvery == 0)
-          graft.sources.Writers.compactBucketed(sb, table)
-        s.catalog.refreshTable(table)
-        sink(assigned, id)
-        DedupGate.unpersistCheckpoints(batch, assigned)
-      }
-      .start()
+    val query = Gate.start(newVecs, checkpointDir, trigger) { (df, id) =>
+      val batch = df.localCheckpoint(true)
+      val sb = batch.sparkSession // the micro-batch session
+      val assigned = assignBatch(batch, cent).localCheckpoint(true)
+      // relation-cache hygiene: a session caches a table's file
+      // listing at first resolution, so BOTH reads around an append
+      // from another session go stale — refresh the replay-guard
+      // read before the anti-join, and the caller's session after
+      // the write (else a restarted guard re-appends and external
+      // readers see an empty index)
+      sb.catalog.refreshTable(table)
+      assigned
+        .join(sb.table(table).select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .write.mode("append").bucketBy(IndexBuckets, "cell").sortBy("cell")
+        .saveAsTable(table)
+      // fold append accretion back to one file per bucket on the
+      // shared gate cadence (compaction preserves the bucket spec,
+      // so search-side pruned reads keep planning pruned)
+      if (id > 0 && id % CompactEvery == 0)
+        graft.sources.Writers.compactBucketed(sb, table)
+      s.catalog.refreshTable(table)
+      sink(assigned, id)
+      DedupGate.unpersistCheckpoints(batch, assigned)
+    }
     // The centroid checkpoint must stay pinned for the query's
     // lifetime (frozen geometry, see object doc) but a long-lived
     // session must not accrete one pinned artifact per started stream

@@ -110,10 +110,5 @@ object CleanPipeline {
       checkpointDir: String,
       sink: (DataFrame, Long) => Unit,
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    transform(lines, dim).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(sink)
-      .start()
+    Gate.start(transform(lines, dim), checkpointDir, trigger)(sink)
 }

@@ -28,16 +28,13 @@ import graft.operators.Dedup
   *     least-once foreachBatch) are not re-absorbed: the batchId guard
   *     makes absorption exactly-once per batch id.
   *
-  * Index lifetime: the folded increments bridge the span between
-  * corpus snapshots — a gate restart rebuilds the index from the
-  * snapshot, and docs admitted since re-enter through the batch
-  * pipeline's next snapshot (the same system-of-record contract as
-  * [[Dedup.appendPairs]]). The union plan grows one (checkpointed) arm
-  * per batch; every [[CollapseEvery]] absorbs the gate state collapses
-  * the arms back into one checkpointed frame each AND unpersists the
-  * superseded arms' blocks immediately (no ContextCleaner-lag double
-  * footprint), so plan width and memory are bounded in code regardless
-  * of snapshot cadence; docs/SCALE.md records the cadence math.
+  * The per-batch state machine — boundary id dedup, the replay guard,
+  * the [[CollapseEvery]] cadence that collapses the union arms and
+  * unpersists the superseded blocks immediately, content-table
+  * compaction, and the index lifetime between corpus snapshots (the
+  * same system-of-record contract as [[Dedup.appendPairs]]) — is the
+  * shared [[Gate.Absorbing]] skeleton; docs/SCALE.md records the
+  * cadence math.
   *
   * ==The 100 TB verify stage: disk-backed corpus content==
   *
@@ -99,7 +96,7 @@ object DedupGate {
     * bounding analyzer cost and per-batch task count at ~CollapseEvery
     * extra arms/tasks worst-case (SCALE.md, streaming-gate cadence).
     * 64 keeps the collapse cost (one full index rewrite) amortized to
-    * ~1.6% of batches while never letting the plan exceed 3x64+3
+    * ~1.6% of batches while never letting the plan exceed 2x64+2
     * union arms even if the corpus snapshot is never republished. */
   val CollapseEvery = 64
 
@@ -187,59 +184,27 @@ object DedupGate {
     * at verify time — `count(*)` over rows that are distinct per doc
     * by construction — so no sizes frame is maintained.) */
   final case class TextIndex(sh: DataFrame, bands: DataFrame,
-      table: Option[String] = None) {
+      table: Option[String] = None) extends Gate.Index[TextIndex] {
 
-    /** Verify-stage read: shingle rows for exactly `ids`. On a
-      * disk-backed index the In-predicate on the bucket column engages
-      * bucket pruning + row-group skipping and the (O(candidates))
-      * result is materialized eagerly — see [[prunedTableRead]] for
-      * why; on the in-memory index it is a partition-local filter of
-      * the checkpointed frame. */
-    def shinglesFor(ids: Seq[Long]): DataFrame = table match {
-      case Some(t) =>
-        prunedTableRead(sh.sparkSession, t, "doc_id", ids,
-          Seq(col("doc_id"), col("shingle"))).localCheckpoint(true)
-      case None =>
-        sh.select(col("doc_id"), col("shingle"))
-          .filter(col("doc_id").isin(ids: _*))
-    }
+    /** Verify-stage read: shingle rows for exactly `ids`
+      * ([[Gate.contentFor]]). */
+    def shinglesFor(ids: Seq[Long]): DataFrame =
+      Gate.contentFor(sh, table, Seq("doc_id", "shingle"), ids)
 
-    /** The over-[[MaxVerifyIds]] form of [[shinglesFor]]: a semi-join
-      * of the content against the candidate-id frame — one streaming
-      * pass over the corpus content (bucketed scan on a disk index,
-      * shuffle on the SLIM id side only), nothing on the driver.
-      * Costlier per batch than the pruned read, but bounded and
-      * predictable — the degradation path for dup storms. */
-    def shinglesForJoin(idsDf: DataFrame): DataFrame = {
-      val content = table match {
-        case Some(t) => sh.sparkSession.table(t)
-        case None => sh
-      }
-      content.select(col("doc_id"), col("shingle"))
-        .join(idsDf.select(col(idsDf.columns.head).as("doc_id")), Seq("doc_id"),
-          "left_semi")
-    }
+    /** Over-[[MaxVerifyIds]] form of [[shinglesFor]]
+      * ([[Gate.contentForJoin]]). */
+    def shinglesForJoin(idsDf: DataFrame): DataFrame =
+      Gate.contentForJoin(sh, table, Seq("doc_id", "shingle"), idsDf)
 
     /** Fold admitted docs in so later batches see them: the increment
       * is checkpointed ONCE, eagerly (so the source batch frame can be
       * dropped by the caller), and unioned into the slim frames;
-      * disk-backed content is APPENDED to the bucketed table (same
-      * spec, catalog-enforced) instead of growing a union arm. */
+      * disk-backed content is APPENDED to the bucketed table
+      * ([[Gate.appendContent]]) instead of growing a union arm. */
     def absorb(admittedDocs: DataFrame): TextIndex = {
       import graft.functions.TextFunctions.shingles
       val shA = shingles(admittedDocs, "doc_id", "text").localCheckpoint(true)
-      val shNext = table match {
-        case Some(t) =>
-          shA.write.mode("append")
-            .bucketBy(GateCorpusBuckets, "doc_id").sortBy("doc_id")
-            .saveAsTable(t)
-          // refresh the previously-chained session too: its cached
-          // file listing does not see this (other-session) append
-          sh.sparkSession.catalog.refreshTable(t)
-          shA.sparkSession.table(t)
-        case None => sh.unionAll(shA)
-      }
-      val next = TextIndex(shNext,
+      val next = TextIndex(Gate.appendContent(sh, shA, table, "doc_id"),
         bands.unionAll(
           Dedup.lshBands(Dedup.minhashSignatures(shA)).localCheckpoint(true)),
         table)
@@ -251,14 +216,11 @@ object DedupGate {
 
     /** Collapse the accumulated union arms into one eagerly
       * checkpointed frame each — content-identical, plan width reset
-      * to 1 (a disk-backed `sh` is already a single table scan and is
-      * left as-is). Pure: the receiver stays valid; the gate STATE
-      * additionally unpersists the superseded arms once the collapsed
-      * copy is materialized ([[TextGateState.process]]). */
-    def collapsed: TextIndex = TextIndex(
-      if (table.isDefined) sh else sh.localCheckpoint(true),
-      bands.localCheckpoint(true),
-      table)
+      * to 1. */
+    def collapsed: TextIndex =
+      TextIndex(Gate.collapseContent(sh, table), bands.localCheckpoint(true), table)
+    def arms: Seq[DataFrame] = Seq(sh, bands)
+    def remount(content: DataFrame): TextIndex = copy(sh = content)
   }
 
   def indexCorpus(corpusDocs: DataFrame): TextIndex = {
@@ -269,22 +231,14 @@ object DedupGate {
   }
 
   /** The 100 TB form of [[indexCorpus]]: corpus shingles land in a
-    * doc_id-bucketed, in-bucket-sorted catalog table (replacing any
-    * stale one) and only the slim band/size frames stay in cluster
-    * memory. The one full corpus pass happens HERE, at gate start —
-    * per-batch verify then reads candidate ids' buckets only. In
-    * production the table is the batch pipeline's published snapshot;
-    * the builder here is the self-contained form. */
+    * doc_id-bucketed, in-bucket-sorted catalog table and only the slim
+    * band frame stays in cluster memory ([[Gate.diskIndex]]). */
   def indexCorpusDisk(corpusDocs: DataFrame, table: String): TextIndex = {
     import graft.functions.TextFunctions.shingles
-    val s = corpusDocs.sparkSession
     val sh = shingles(corpusDocs, "doc_id", "text").localCheckpoint(true)
-    graft.sources.Writers.replaceBucketed(s, sh, "doc_id", GateCorpusBuckets, table)
-    val idx = TextIndex(s.table(table),
+    Gate.diskIndex(sh, "doc_id", table)(TextIndex(_,
       Dedup.lshBands(Dedup.minhashSignatures(sh)).localCheckpoint(true),
-      Some(table))
-    unpersistCheckpoints(sh) // content now lives in the table
-    idx
+      Some(table)))
   }
 
   /** New docs vs the index AND vs each other: DISTINCT candidate pairs
@@ -381,87 +335,39 @@ object DedupGate {
   def duplicates(newDocs: DataFrame, corpusDocs: DataFrame): DataFrame =
     duplicates(newDocs, indexCorpus(corpusDocs))
 
-  /** The cross-batch mutable state of a running text gate — the
-    * growing corpus index plus the exactly-once absorption guard —
-    * extracted from [[start]]'s foreachBatch so the absorb path is
-    * unit-testable without a streaming harness. One instance per gate;
-    * [[process]] is what foreachBatch invokes per micro-batch.
+  /** The pair gates' shared hooks on [[Gate.Absorbing]]: a hit
+    * rejects its `newCol` id, and every hit except a self-hit feeds the
+    * pair table. Self-hits (a replayed/re-ingested id verifying against
+    * its own corpus content) are REPORTED to the sink but never
+    * persisted: a (d,d) row in the pair index would surface d as a
+    * phantom singleton cluster in connectedComponents. */
+  sealed abstract class PairGate[I <: Gate.Index[I]](init: I, idCol: String,
+      newCol: String, pairTable: Option[String], collapseEvery: Int,
+      corpusTable: Option[String])
+      extends Gate.Absorbing[I](init, idCol, collapseEvery, corpusTable) {
+    protected def rejected(hits: DataFrame): DataFrame =
+      hits.select(col(newCol).as(idCol)).distinct()
+    override protected def afterSink(batch: DataFrame, hits: DataFrame): Unit =
+      pairTable.foreach(t => Dedup.appendPairs(batch.sparkSession, t,
+        hits.filter(col(newCol) =!= col("dup_of"))
+          .select(col(newCol).as("doc_a"), col("dup_of").as("doc_b"))))
+  }
+
+  /** Cross-batch state of a running text gate ([[Gate.Absorbing]]):
+    * per micro-batch, verify dups, sink them, maintain the pair table,
+    * then absorb the batch's admitted docs exactly once per batch id.
     * `corpusTable` switches the index to the disk-backed 100 TB form
     * ([[indexCorpusDisk]]); the gate is the single writer of that
     * table for its lifetime. */
   final class TextGateState(corpusDocs: DataFrame,
       pairTable: Option[String] = None,
       collapseEvery: Int = CollapseEvery,
-      corpusTable: Option[String] = None) {
-    @volatile private var corpus = corpusTable
-      .map(t => indexCorpusDisk(corpusDocs, t))
-      .getOrElse(indexCorpus(corpusDocs))
-    private var absorbsSinceCollapse = 0
-    private val absorbedBatches =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-
-    /** Current index (corpus snapshot + absorbed increments). */
-    def index: TextIndex = corpus
-
-    /** One micro-batch: verify dups, sink them, maintain the pair
-      * table, then absorb the batch's admitted docs. Absorption is
-      * exactly-once per batch id — a replayed batch (at-least-once
-      * foreachBatch) re-emits its hits but never re-absorbs, so the
-      * index cannot double-count shingles. The batch, dup, and
-      * per-call scratch frames are checkpointed eagerly and
-      * unpersisted before return — per-batch blocks never wait on
-      * driver GC. Consequence for `sink`: it must fully CONSUME the
-      * frame it is handed before returning (collect/write inside the
-      * call, the normal foreachBatch discipline) — a sink that defers
-      * reading to after process() returns would find the lineage-free
-      * checkpoint blocks already dropped. */
-    def process(df: DataFrame, id: Long, sink: (DataFrame, Long) => Unit): Unit = {
-      // batch ids deduped at the boundary (round-21, ADVICE r20): an
-      // at-least-once source can re-deliver a doc WITHIN one batch
-      // frame, and shingles()' per-id distinctness is row-local — a
-      // duplicate id row would double-count shared shingles and skew
-      // the verified Jaccard. One tiny batch-sized exchange; unique-id
-      // batches (the normal case) are row-identical after it.
-      val batch = df.dropDuplicates("doc_id").localCheckpoint(true)
-      val (dupsRaw, scratch) = duplicatesWithScratch(batch, corpus)
-      val dups = dupsRaw.localCheckpoint(true)
-      // the eager checkpoint above materialized the result — the
-      // call's scratch checkpoints are dead now; drop them
-      unpersistCheckpoints(scratch: _*)
-      sink(dups, id)
-      // self-hits (a replayed/re-ingested id verifying against its own
-      // corpus content) are REPORTED to the sink but never persisted:
-      // a (d,d) row in the pair index would surface d as a phantom
-      // singleton cluster in connectedComponents
-      pairTable.foreach(t => Dedup.appendPairs(df.sparkSession, t,
-        dups.filter(col("new_doc") =!= col("dup_of"))
-          .select(col("new_doc").as("doc_a"), col("dup_of").as("doc_b"))))
-      if (absorbedBatches.add(id)) {
-        val admitted = batch.join(
-          dups.select(col("new_doc").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        corpus = corpus.absorb(admitted)
-        absorbsSinceCollapse += 1
-        if (absorbsSinceCollapse >= collapseEvery) {
-          val old = corpus
-          corpus = old.collapsed // eager: new copies exist before...
-          // ...the superseded arms (snapshot + increments) are dropped
-          unpersistCheckpoints(old.sh, old.bands)
-          // fold the content table's append accretion on the same
-          // cadence: the gate is the table's single writer and
-          // process() its only reader, so the two-statement catalog
-          // swap inside compactBucketed has no concurrent observer —
-          // exactly the maintenance window the compaction contract
-          // asks for. Refresh the scan afterwards (new table files).
-          corpusTable.foreach { t =>
-            graft.sources.Writers.compactBucketed(df.sparkSession, t)
-            corpus = corpus.copy(sh = df.sparkSession.table(t))
-          }
-          absorbsSinceCollapse = 0
-        }
-      }
-      unpersistCheckpoints(batch, dups)
-    }
+      corpusTable: Option[String] = None)
+      extends PairGate[TextIndex](
+        corpusTable.fold(indexCorpus(corpusDocs))(indexCorpusDisk(corpusDocs, _)),
+        "doc_id", "new_doc", pairTable, collapseEvery, corpusTable) {
+    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) =
+      duplicatesWithScratch(batch, index)
   }
 
   /** Start the gate: raw new docs stream into foreachBatch against the
@@ -479,12 +385,7 @@ object DedupGate {
       pairTable: Option[String] = None,
       corpusTable: Option[String] = None): StreamingQuery = {
     val state = new TextGateState(corpusDocs, pairTable, CollapseEvery, corpusTable)
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) => state.process(df, id, sink) }
-      .start()
+    Gate.start(newDocs, checkpointDir, trigger)(state.process(_, _, sink))
   }
 
   /** Batch analog for the oracle gate: every doc_id % 4 == 0 document
@@ -636,46 +537,21 @@ object DedupGate {
     * [[embedDuplicates]] verifies at its threshold. */
   final case class EmbedIndex(bands: DataFrame, vecs: DataFrame,
       table: Option[String] = None,
-      banding: EmbedBanding = EmbedBanding.Narrow) {
+      banding: EmbedBanding = EmbedBanding.Narrow) extends Gate.Index[EmbedIndex] {
 
     /** Verify-stage read: (vec_id, embedding, n2) for exactly `ids` —
-      * bucket-pruned on a disk index ([[TextIndex.shinglesFor]]). */
-    def vectorsFor(ids: Seq[Long]): DataFrame = table match {
-      case Some(t) =>
-        prunedTableRead(vecs.sparkSession, t, "vec_id", ids,
-          Seq(col("vec_id"), col("embedding"), col("n2"))).localCheckpoint(true)
-      case None =>
-        vecs.select(col("vec_id"), col("embedding"), col("n2"))
-          .filter(col("vec_id").isin(ids: _*))
-    }
+      * bucket-pruned on a disk index ([[Gate.contentFor]]). */
+    def vectorsFor(ids: Seq[Long]): DataFrame =
+      Gate.contentFor(vecs, table, VecCols, ids)
 
-    /** Over-[[MaxVerifyIds]] form of [[vectorsFor]] — semi-join
-      * against the candidate-id frame ([[TextIndex.shinglesForJoin]]'s
-      * degradation contract). */
-    def vectorsForJoin(idsDf: DataFrame): DataFrame = {
-      val content = table match {
-        case Some(t) => vecs.sparkSession.table(t)
-        case None => vecs
-      }
-      content.select(col("vec_id"), col("embedding"), col("n2"))
-        .join(idsDf.select(col(idsDf.columns.head).as("vec_id")), Seq("vec_id"),
-          "left_semi")
-    }
+    /** Over-[[MaxVerifyIds]] form of [[vectorsFor]]
+      * ([[Gate.contentForJoin]]). */
+    def vectorsForJoin(idsDf: DataFrame): DataFrame =
+      Gate.contentForJoin(vecs, table, VecCols, idsDf)
 
     def absorb(admittedVecs: DataFrame): EmbedIndex = {
-      import graft.functions.VectorFunctions.norm2Exact
-      val vA = admittedVecs.select(col("vec_id"), col("embedding"),
-        norm2Exact(col("embedding")).as("n2")).localCheckpoint(true)
-      val vecsNext = table match {
-        case Some(t) =>
-          vA.write.mode("append")
-            .bucketBy(GateCorpusBuckets, "vec_id").sortBy("vec_id")
-            .saveAsTable(t)
-          // see TextIndex.absorb: keep the old chained session fresh
-          vecs.sparkSession.catalog.refreshTable(t)
-          vA.sparkSession.table(t)
-        case None => vecs.unionAll(vA)
-      }
+      val vA = withN2(admittedVecs).localCheckpoint(true)
+      val vecsNext = Gate.appendContent(vecs, vA, table, "vec_id")
       val next = EmbedIndex(
         bands.unionAll(embedBands(vA, banding).localCheckpoint(true)),
         vecsNext, table, banding)
@@ -685,9 +561,18 @@ object DedupGate {
 
     /** See [[TextIndex.collapsed]] — same plan-width reset, pure. */
     def collapsed: EmbedIndex = EmbedIndex(
-      bands.localCheckpoint(true),
-      if (table.isDefined) vecs else vecs.localCheckpoint(true),
-      table, banding)
+      bands.localCheckpoint(true), Gate.collapseContent(vecs, table), table, banding)
+    def arms: Seq[DataFrame] = Seq(bands, vecs)
+    def remount(content: DataFrame): EmbedIndex = copy(vecs = content)
+  }
+
+  /** The embed content columns; `vec_id` keys the content table. */
+  private val VecCols = Seq("vec_id", "embedding", "n2")
+
+  /** Vectors with their exact squared norms: the content row shape. */
+  private def withN2(vecs: DataFrame): DataFrame = {
+    import graft.functions.VectorFunctions.norm2Exact
+    vecs.select(col("vec_id"), col("embedding"), norm2Exact(col("embedding")).as("n2"))
   }
 
   /** (vec_id, layout, band_id, band_val) band rows for `vecs` under
@@ -730,14 +615,9 @@ object DedupGate {
   }
 
   def indexEmbedCorpus(corpusVecs: DataFrame,
-      banding: EmbedBanding = EmbedBanding.Narrow): EmbedIndex = {
-    import graft.functions.VectorFunctions.norm2Exact
-    EmbedIndex(
-      embedBands(corpusVecs, banding).localCheckpoint(false),
-      corpusVecs.select(col("vec_id"), col("embedding"),
-        norm2Exact(col("embedding")).as("n2")).localCheckpoint(false),
-      None, banding)
-  }
+      banding: EmbedBanding = EmbedBanding.Narrow): EmbedIndex =
+    EmbedIndex(embedBands(corpusVecs, banding).localCheckpoint(false),
+      withN2(corpusVecs).localCheckpoint(false), None, banding)
 
   /** The 100 TB form of [[indexEmbedCorpus]] — vectors (with
     * precomputed norms) land in a vec_id-bucketed catalog table; see
@@ -754,18 +634,16 @@ object DedupGate {
     * a round-over-round guess at which stage moved. */
   private[graft] def indexEmbedCorpusDiskTimed(corpusVecs: DataFrame, table: String,
       banding: EmbedBanding): (EmbedIndex, Seq[(String, Double)]) = {
-    import graft.functions.VectorFunctions.norm2Exact
-    val s = corpusVecs.sparkSession
     val t0 = System.nanoTime()
-    val vecs = corpusVecs.select(col("vec_id"), col("embedding"),
-      norm2Exact(col("embedding")).as("n2")).localCheckpoint(true)
+    val vecs = withN2(corpusVecs).localCheckpoint(true)
     val t1 = System.nanoTime()
-    graft.sources.Writers.replaceBucketed(s, vecs, "vec_id", GateCorpusBuckets, table)
-    val t2 = System.nanoTime()
-    val bands = embedBands(vecs, banding).localCheckpoint(true)
+    var t2 = t1
+    val idx = Gate.diskIndex(vecs, "vec_id", table) { content =>
+      t2 = System.nanoTime()
+      EmbedIndex(embedBands(vecs, banding).localCheckpoint(true), content,
+        Some(table), banding)
+    }
     val t3 = System.nanoTime()
-    val idx = EmbedIndex(bands, s.table(table), Some(table), banding)
-    unpersistCheckpoints(vecs)
     (idx, Seq("norm_ckpt" -> (t1 - t0) / 1e9,
       "bucket_write" -> (t2 - t1) / 1e9, "band_build" -> (t3 - t2) / 1e9))
   }
@@ -802,9 +680,7 @@ object DedupGate {
     * don't monitor never pay the extra (cache-local) count job. */
   private def embedDuplicatesWithScratch(
       newVecs: DataFrame, corpus: EmbedIndex): (DataFrame, Seq[DataFrame], () => Long) = {
-    import graft.functions.VectorFunctions.norm2Exact
-    val vecsNew = newVecs.select(col("vec_id"), col("embedding"),
-      norm2Exact(col("embedding")).as("n2")).localCheckpoint(false)
+    val vecsNew = withN2(newVecs).localCheckpoint(false)
     val bandsNew = embedBands(vecsNew, corpus.banding).localCheckpoint(false)
     val candCorpus = bandsNew
       .join(corpus.bands.select(col("vec_id").as("dup_of"),
@@ -834,7 +710,7 @@ object DedupGate {
     val corpusCandIds = vecsCorpusCand.select(col("vec_id"))
     val vecsB = vecsCorpusCand.unionAll(
       vecsNew.join(corpusCandIds, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("embedding"), col("n2")))
+        .select(VecCols.map(col): _*))
     val pairRows = cand
       .join(vecsNew.select(col("vec_id").as("va"), col("embedding").as("ea"),
         col("n2").as("n2a")), "va")
@@ -849,72 +725,42 @@ object DedupGate {
     embedDuplicates(newVecs, indexEmbedCorpus(corpusVecs))
 
   /** Cross-batch state of a running embedding gate — the semantic twin
-    * of [[TextGateState]] (growing SRP index + exactly-once absorb
-    * guard), extracted for the same unit-testability. */
+    * of [[TextGateState]] on the same [[Gate.Absorbing]] skeleton, plus
+    * the [[BandingMonitor]] trip wire fed once per batch. */
   final class EmbedGateState(corpusVecs: DataFrame,
       pairTable: Option[String] = None,
       collapseEvery: Int = CollapseEvery,
       corpusTable: Option[String] = None,
-      banding: EmbedBanding = EmbedBanding.Narrow) {
-    @volatile private var corpus = corpusTable
-      .map(t => indexEmbedCorpusDisk(corpusVecs, t, banding))
-      .getOrElse(indexEmbedCorpus(corpusVecs, banding))
-    private var absorbsSinceCollapse = 0
-    private val absorbedBatches =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      banding: EmbedBanding = EmbedBanding.Narrow)
+      extends PairGate[EmbedIndex](
+        corpusTable.fold(indexEmbedCorpus(corpusVecs, banding))(
+          indexEmbedCorpusDisk(corpusVecs, _, banding)),
+        "vec_id", "new_vec", pairTable, collapseEvery, corpusTable) {
     // escalation trip wire: corpus size is tracked incrementally (one
     // count at init, then +admitted per absorbed batch) — never a
     // per-batch table count
     private val monitor = new BandingMonitor(banding)
-    private var corpusN = corpus.vecs.count()
-
-    /** Current index (corpus snapshot + absorbed increments). */
-    def index: EmbedIndex = corpus
+    private var corpusN = index.vecs.count()
+    private var batchN = 0L
 
     /** [[BandingMonitor.advice]] for this gate: Some(deeper config)
       * once the measured candidate rate has tripped the wire. */
     def escalationAdvice: Option[EmbedBanding] = monitor.advice
 
-    /** One micro-batch — see [[TextGateState.process]] (including the
-      * synchronous-sink contract). */
-    def process(df: DataFrame, id: Long, sink: (DataFrame, Long) => Unit): Unit = {
-      val batch = df.localCheckpoint(true)
-      val (dupsRaw, scratch, candCount) = embedDuplicatesWithScratch(batch, corpus)
-      val dups = dupsRaw.localCheckpoint(true)
-      // count candidates while the candidate frame is still cached,
-      // then feed the trip wire (batch/corpus counts are cache-local)
-      val nCand = candCount()
-      unpersistCheckpoints(scratch: _*)
-      monitor.observe(nCand, batch.count(), corpusN)
-      sink(dups, id)
-      // see TextGateState.process: self-hits reported, never persisted
-      pairTable.foreach(t => Dedup.appendPairs(df.sparkSession, t,
-        dups.filter(col("new_vec") =!= col("dup_of"))
-          .select(col("new_vec").as("doc_a"), col("dup_of").as("doc_b"))))
-      if (absorbedBatches.add(id)) {
-        val admitted = batch.join(
-          dups.select(col("new_vec").as("vec_id")).distinct(),
-          Seq("vec_id"), "left_anti")
-        corpus = corpus.absorb(admitted)
-        // incremental corpus-size tracking for the trip wire: admitted
-        // = batch minus the distinct flagged ids (both frames cached)
-        corpusN += batch.count() -
-          dups.select(col("new_vec")).distinct().count()
-        absorbsSinceCollapse += 1
-        if (absorbsSinceCollapse >= collapseEvery) {
-          val old = corpus
-          corpus = old.collapsed
-          unpersistCheckpoints(old.bands, old.vecs)
-          // see TextGateState.process: content-table compaction on the
-          // collapse cadence, single-writer window
-          corpusTable.foreach { t =>
-            graft.sources.Writers.compactBucketed(df.sparkSession, t)
-            corpus = corpus.copy(vecs = df.sparkSession.table(t))
-          }
-          absorbsSinceCollapse = 0
-        }
-      }
-      unpersistCheckpoints(batch, dups)
+    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) = {
+      val (dups, scratch, candCount) = embedDuplicatesWithScratch(batch, index)
+      // the batch is counted once; the candidate count reads the frame
+      // the candidate-id collect already materialized
+      batchN = batch.count()
+      monitor.observe(candCount(), batchN, corpusN)
+      (dups, scratch)
+    }
+
+    // admitted = batch minus the distinct flagged ids
+    override protected def rejected(hits: DataFrame): DataFrame = {
+      val ids = super.rejected(hits)
+      corpusN += batchN - ids.count()
+      ids
     }
   }
 
@@ -935,12 +781,7 @@ object DedupGate {
       banding: EmbedBanding = EmbedBanding.Narrow): StreamingQuery = {
     val state = new EmbedGateState(corpusVecs, pairTable, CollapseEvery,
       corpusTable, banding)
-    newVecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) => state.process(df, id, sink) }
-      .start()
+    Gate.start(newVecs, checkpointDir, trigger)(state.process(_, _, sink))
   }
 
   /** Batch analog for the oracle: vec_id % 4 == 0 as ONE "new" batch

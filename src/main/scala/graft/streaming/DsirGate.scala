@@ -90,17 +90,7 @@ object DsirGate {
       modelTable: Option[String] = None): StreamingQuery = {
     val m = modelTable.map(t => trainDisk(corpusDocs, t))
       .getOrElse(TextAnalysis.dsirTrain(corpusDocs))
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = df.localCheckpoint(true)
-        val verdicts = score(batch, m).localCheckpoint(true)
-        sink(verdicts, id)
-        DedupGate.unpersistCheckpoints(batch, verdicts)
-      }
-      .start()
+    Gate.startFrozen(newDocs, checkpointDir, trigger, sink)(score(_, m))
   }
 
   /** Batch analog for the oracle gate: every doc_id % 4 == 0 document

@@ -42,12 +42,12 @@ object IngestPipeline {
   /** [[verdicts]] plus the span stage's internal checkpoint frame, so
     * the long-running caller ([[IngestState.process]]) can unpersist
     * the scratch once its own eager checkpoint severs the plan
-    * reference — the per-micro-batch hygiene every gate state applies
-    * (one leaked cached RDD per trigger otherwise). One-shot batch
+    * reference — the [[Gate.Absorbing]] per-micro-batch hygiene (one
+    * leaked cached RDD per trigger otherwise). One-shot batch
     * callers use [[verdicts]]. */
   private[streaming] def verdictsWithScratch(batch: DataFrame,
       lm: QualityGate.LmIndex,
-      spans: SpanGate.SpanIndex): (DataFrame, DataFrame) = {
+      spans: SpanGate.SpanIndex): (DataFrame, Seq[DataFrame]) = {
     val q = QualityGate.score(batch, lm)
       .select(col("doc_id"), col("admit").as("q_admit"))
     val (nov, scratch) = SpanGate.noveltyWithScratch(batch, spans)
@@ -86,53 +86,20 @@ object IngestPipeline {
       .orderBy(col("stage"))
   }
 
-  /** Cross-batch state: the frozen LM plus the absorbing span index.
-    * Only docs admitted by BOTH stages absorb (exactly-once per batch
+  /** Cross-batch state: the frozen LM plus the absorbing span index
+    * ([[SpanGate.NoveltyGate]]). Every batch doc has a verdict row, so
+    * only docs admitted by BOTH stages absorb (exactly-once per batch
     * id, the span gate's replay guard). */
   final class IngestState(corpusDocs: DataFrame,
       spanTable: Option[String] = None,
-      collapseEvery: Int = DedupGate.CollapseEvery) {
+      collapseEvery: Int = DedupGate.CollapseEvery)
+      extends SpanGate.NoveltyGate(corpusDocs, collapseEvery, spanTable) {
     private val lm = QualityGate.trainLm(corpusDocs)
-    @volatile private var spans = spanTable
-      .map(t => SpanGate.indexSpansDisk(corpusDocs, t))
-      .getOrElse(SpanGate.indexSpans(corpusDocs))
-    private var absorbsSinceCollapse = 0
-    private val absorbedBatches =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 
-    def spanIndex: SpanGate.SpanIndex = spans
+    def spanIndex: SpanGate.SpanIndex = index
 
-    def process(df: DataFrame, id: Long,
-        sink: (DataFrame, Long) => Unit): Unit = {
-      val batch = df.localCheckpoint(true)
-      val (v0, scratch) = verdictsWithScratch(batch, lm, spans)
-      val v = v0.localCheckpoint(true)
-      // the eager checkpoint severed the span-scratch reference — drop
-      // it now, not at driver GC
-      DedupGate.unpersistCheckpoints(scratch)
-      sink(v, id)
-      if (absorbedBatches.add(id)) {
-        val admitted = batch.join(
-          v.filter(col("admit") === 1L).select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-        spans = spans.absorb(admitted)
-        // union-arm growth bound, the SpanGateState cadence: collapse
-        // the accumulated absorb arms (and compact the disk table)
-        // so the verify plan never widens without bound
-        absorbsSinceCollapse += 1
-        if (absorbsSinceCollapse >= collapseEvery) {
-          val old = spans
-          spans = old.collapsed
-          DedupGate.unpersistCheckpoints(old.hs)
-          spanTable.foreach { t =>
-            graft.sources.Writers.compactBucketed(df.sparkSession, t)
-            spans = spans.copy(hs = df.sparkSession.table(t))
-          }
-          absorbsSinceCollapse = 0
-        }
-      }
-      DedupGate.unpersistCheckpoints(batch, v)
-    }
+    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) =
+      verdictsWithScratch(batch, lm, index)
   }
 
   /** Start the composed pipeline over a document stream. */
@@ -144,12 +111,7 @@ object IngestPipeline {
       trigger: Trigger = Trigger.ProcessingTime(0),
       spanTable: Option[String] = None): StreamingQuery = {
     val state = new IngestState(corpusDocs, spanTable)
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) => state.process(df, id, sink) }
-      .start()
+    Gate.start(newDocs, checkpointDir, trigger)(state.process(_, _, sink))
   }
 
   /** Batch analog for the oracle: the %4 batch against the %4-rest

@@ -54,24 +54,14 @@ object QualityClfGate {
       monitor: Option[QclfDriftMonitor] = None): StreamingQuery = {
     val m = modelTable.map(t => trainDisk(corpusDocs, t))
       .getOrElse(QclfModel(QualityClf.train(corpusDocs)))
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = df.localCheckpoint(true)
-        val verdicts = QualityClf.score(batch, m)
-          .orderBy(col("doc_id")).localCheckpoint(true)
-        sink(verdicts, id)
-        // drift wire: one bounded 1-row aggregate per trigger —
-        // (n, mean score) fed to the frozen-baseline z test
-        monitor.foreach { mon =>
-          val st = verdicts.agg(count(lit(1)), avg(col("p_x1e6"))).head()
-          if (st.getLong(0) > 0) mon.observe(st.getLong(0), st.getDouble(1))
-        }
-        DedupGate.unpersistCheckpoints(batch, verdicts)
-      }
-      .start()
+    Gate.startFrozen(newDocs, checkpointDir, trigger, sink)(
+      QualityClf.score(_, m).orderBy(col("doc_id")),
+      // drift wire: one bounded 1-row aggregate per trigger —
+      // (n, mean score) fed to the frozen-baseline z test
+      (_, verdicts) => monitor.foreach { mon =>
+        val st = verdicts.agg(count(lit(1)), avg(col("p_x1e6"))).head()
+        if (st.getLong(0) > 0) mon.observe(st.getLong(0), st.getDouble(1))
+      })
   }
 
   // ------------------------------------------------ drift DETECTION

@@ -129,17 +129,7 @@ object QualityGate {
       lmTable: Option[String] = None): StreamingQuery = {
     val lm = lmTable.map(t => trainLmDisk(corpusDocs, t))
       .getOrElse(trainLm(corpusDocs))
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = df.localCheckpoint(true)
-        val verdicts = score(batch, lm).localCheckpoint(true)
-        sink(verdicts, id)
-        DedupGate.unpersistCheckpoints(batch, verdicts)
-      }
-      .start()
+    Gate.startFrozen(newDocs, checkpointDir, trigger, sink)(score(_, lm))
   }
 
   /** Batch analog for the oracle gate: every doc_id % 4 == 0 document
@@ -251,17 +241,7 @@ object QualityGate {
       sink: (DataFrame, Long) => Unit,
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery = {
     val lm = trainLm3(corpusDocs)
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = df.localCheckpoint(true)
-        val verdicts = score3(batch, lm).localCheckpoint(true)
-        sink(verdicts, id)
-        DedupGate.unpersistCheckpoints(batch, verdicts)
-      }
-      .start()
+    Gate.startFrozen(newDocs, checkpointDir, trigger, sink)(score3(_, lm))
   }
 
   /** Batch analog of the trigram gate for the oracle: every

@@ -536,12 +536,8 @@ object ReportPipeline {
       checkpointDir: String,
       sink: KeyedUpsertSink,
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    aggregate(ReportJob.parse(lines)).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
-      .start()
+    Gate.start(aggregate(ReportJob.parse(lines)), checkpointDir, trigger, "update")(
+      sink.write)
 
   /** Start the windowed-agg query against the DURABLE keyed upsert
     * sink — the production K2 shape (partition-overwrite parquet
@@ -559,12 +555,8 @@ object ReportPipeline {
       // advancement schedules empty batches too) — the frame the sink
       // materialised, so reading it does not re-run the stateful plan.
       afterBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    aggregate(ReportJob.parse(lines)).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((df: DataFrame, id: Long) => afterBatch(sink.write(df, id), id))
-      .start()
+    Gate.start(aggregate(ReportJob.parse(lines)), checkpointDir, trigger, "update")(
+      (df, id) => afterBatch(sink.write(df, id), id))
 
   /** Start the late-record side-output query. */
   def startLateRouter(
@@ -572,10 +564,5 @@ object ReportPipeline {
       checkpointDir: String,
       router: LateRouter,
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    ReportJob.parse(lines).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((df: DataFrame, id: Long) => router.route(df, id))
-      .start()
+    Gate.start(ReportJob.parse(lines), checkpointDir, trigger)(router.route)
 }

@@ -42,7 +42,7 @@ import graft.functions.TextFunctions.tokens
   */
 object SpanGate {
 
-  import DedupGate.{CollapseEvery, GateCorpusBuckets, unpersistCheckpoints}
+  import DedupGate.CollapseEvery
   import graft.operators.Dedup.SpanW
 
   /** Positional span hashes — (doc_id, h), one row per span POSITION
@@ -64,7 +64,8 @@ object SpanGate {
     * (`table` set — bucketed by `h`). Distinctness is an invariant:
     * the builder distincts, and [[absorb]] appends anti-joined
     * increments only. */
-  final case class SpanIndex(hs: DataFrame, table: Option[String] = None) {
+  final case class SpanIndex(hs: DataFrame, table: Option[String] = None)
+      extends Gate.Index[SpanIndex] {
 
     /** The distinct-hash content frame (table scan in disk mode). */
     def content: DataFrame = table match {
@@ -79,51 +80,32 @@ object SpanGate {
       val hNew = spanHashes(admittedDocs).select(col("h")).distinct()
         .join(content.select(col("h")), Seq("h"), "left_anti")
         .localCheckpoint(true)
-      table match {
-        case Some(t) =>
-          hNew.write.mode("append")
-            .bucketBy(GateCorpusBuckets, "h").sortBy("h")
-            .saveAsTable(t)
-          // Re-chain to the WRITING session's table frame (the
-          // TextIndex/EmbedIndex convention): a session caches a
-          // table's file listing at first resolution and only its OWN
-          // writes invalidate it, so chaining to the old session after
-          // a foreachBatch-clone write leaves every later novelty read
-          // (and this anti-join) blind to the rows just absorbed —
-          // wrong verdicts AND duplicate re-appends. The old chained
-          // session is refreshed too, for any reader still holding it.
-          hs.sparkSession.catalog.refreshTable(t)
-          val next = SpanIndex(hNew.sparkSession.table(t), table)
-          unpersistCheckpoints(hNew) // content now lives in the table
-          next
-        case None => SpanIndex(hs.unionAll(hNew), table)
-      }
+      // a disk append re-chains to the writing session's table frame
+      // ([[Gate.appendContent]]): a stale listing would leave later
+      // novelty reads (and this anti-join) blind to the rows just
+      // absorbed — wrong verdicts AND duplicate re-appends
+      val next = SpanIndex(Gate.appendContent(hs, hNew, table, "h"), table)
+      if (table.isDefined) DedupGate.unpersistCheckpoints(hNew)
+      next
     }
 
-    /** Collapse accumulated union arms into one checkpointed frame
-      * (disk mode is already a single table scan — left as-is). Pure:
-      * the receiver stays valid; the gate state unpersists superseded
-      * arms once the collapsed copy is materialized. */
-    def collapsed: SpanIndex =
-      SpanIndex(if (table.isDefined) hs else hs.localCheckpoint(true), table)
+    /** Collapse accumulated union arms into one checkpointed frame. */
+    def collapsed: SpanIndex = SpanIndex(Gate.collapseContent(hs, table), table)
+    def arms: Seq[DataFrame] = Seq(hs)
+    def remount(content: DataFrame): SpanIndex = copy(hs = content)
   }
+
+  private def distinctHashes(docs: DataFrame): DataFrame =
+    spanHashes(docs).select(col("h")).distinct().localCheckpoint(true)
 
   /** Build the in-memory index from a corpus snapshot. */
   def indexSpans(corpusDocs: DataFrame): SpanIndex =
-    SpanIndex(spanHashes(corpusDocs).select(col("h")).distinct()
-      .localCheckpoint(true))
+    SpanIndex(distinctHashes(corpusDocs))
 
   /** Build the DISK-backed index: distinct hashes written to a table
     * bucketed by `h` — the 100 TB posture ([[SpanGate]] module doc). */
-  def indexSpansDisk(corpusDocs: DataFrame, table: String): SpanIndex = {
-    val s = corpusDocs.sparkSession
-    val hs = spanHashes(corpusDocs).select(col("h")).distinct()
-      .localCheckpoint(true)
-    graft.sources.Writers.replaceBucketed(s, hs, "h", GateCorpusBuckets, table)
-    val idx = SpanIndex(s.table(table), Some(table))
-    unpersistCheckpoints(hs)
-    idx
-  }
+  def indexSpansDisk(corpusDocs: DataFrame, table: String): SpanIndex =
+    Gate.diskIndex(distinctHashes(corpusDocs), "h", table)(SpanIndex(_, Some(table)))
 
   /** Verify stage: per new doc with >= [[SpanW]] tokens, the span
     * total, the count of positions whose content the corpus already
@@ -136,15 +118,15 @@ object SpanGate {
     noveltyWithScratch(newDocs, idx)._1
 
   /** [[novelty]] plus its internal span-hash checkpoint frame, so a
-    * long-running caller ([[SpanGateState.process]]) can unpersist the
-    * scratch once the verdicts are materialized — the eager verdict
-    * checkpoint severs the plan reference to `sp`, and without an
-    * explicit unpersist one cached span RDD would leak per micro-batch
-    * until driver GC (the hygiene [[DedupGate.TextGateState]] applies
-    * via its own scratch variant). One-shot batch callers can use
-    * [[novelty]]: the single cached block dies with the query. */
+    * long-running caller ([[SpanGateState]]) can unpersist the scratch
+    * once the verdicts are materialized — the eager verdict checkpoint
+    * severs the plan reference to `sp`, and without an explicit
+    * unpersist one cached span RDD would leak per micro-batch until
+    * driver GC (the [[Gate.Absorbing]] scratch hygiene). One-shot batch
+    * callers can use [[novelty]]: the single cached block dies with the
+    * query. */
   private[streaming] def noveltyWithScratch(
-      newDocs: DataFrame, idx: SpanIndex): (DataFrame, DataFrame) = {
+      newDocs: DataFrame, idx: SpanIndex): (DataFrame, Seq[DataFrame]) = {
     // feeds two subtrees (totals + the semi-join) — checkpoint once
     val sp = spanHashes(newDocs).localCheckpoint(false)
     val dup = sp.join(idx.content.select(col("h")), Seq("h"), "left_semi")
@@ -158,14 +140,26 @@ object SpanGate {
         when(col("dup_spans") * 2 <= col("n_spans"), 1L).otherwise(0L)
           .as("admit"))
       .orderBy(col("doc_id"))
-    (result, sp)
+    (result, Seq(sp))
   }
 
-  /** Cross-batch mutable state of a running span gate — same contract
-    * as [[DedupGate.TextGateState]]: exactly-once absorption per batch
-    * id (replays re-emit verdicts, never re-absorb), eager per-batch
-    * checkpoint hygiene, collapse + table compaction on the shared
-    * cadence.
+  /** The span index on the [[Gate.Absorbing]] skeleton: rows the
+    * verdicts reject (`admit` = 0) stay out; everything else absorbs —
+    * admitted docs AND short no-verdict docs. Shared by
+    * [[SpanGateState]] and [[IngestPipeline.IngestState]]. */
+  abstract class NoveltyGate(corpusDocs: DataFrame, collapseEvery: Int,
+      corpusTable: Option[String])
+      extends Gate.Absorbing[SpanIndex](
+        corpusTable.fold(indexSpans(corpusDocs))(indexSpansDisk(corpusDocs, _)),
+        "doc_id", collapseEvery, corpusTable) {
+    protected def rejected(verdicts: DataFrame): DataFrame =
+      verdicts.filter(col("admit") === 0L).select(col("doc_id"))
+  }
+
+  /** Cross-batch state of a running span gate ([[Gate.Absorbing]]):
+    * exactly-once absorption per batch id (replays re-emit verdicts,
+    * never re-absorb), eager per-batch checkpoint hygiene, collapse +
+    * table compaction on the shared cadence.
     *
     * Replay-verdict drift (documented, the TextGate self-hit
     * convention): an at-least-once replay RECOMPUTES verdicts against
@@ -179,46 +173,10 @@ object SpanGate {
     * the same discipline the text gate asks of its self-hit rows. */
   final class SpanGateState(corpusDocs: DataFrame,
       collapseEvery: Int = CollapseEvery,
-      corpusTable: Option[String] = None) {
-    @volatile private var idx = corpusTable
-      .map(t => indexSpansDisk(corpusDocs, t))
-      .getOrElse(indexSpans(corpusDocs))
-    private var absorbsSinceCollapse = 0
-    private val absorbedBatches =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-
-    /** Current index (corpus snapshot + absorbed increments). */
-    def index: SpanIndex = idx
-
-    /** One micro-batch: verdicts to the sink, then absorb everything
-      * not rejected (admitted docs AND short no-verdict docs). */
-    def process(df: DataFrame, id: Long, sink: (DataFrame, Long) => Unit): Unit = {
-      val batch = df.localCheckpoint(true)
-      val (nov, scratch) = noveltyWithScratch(batch, idx)
-      val verdicts = nov.localCheckpoint(true)
-      // the eager checkpoint above severed the plan's reference to the
-      // span-hash scratch — drop it NOW, not at driver GC
-      unpersistCheckpoints(scratch)
-      sink(verdicts, id)
-      if (absorbedBatches.add(id)) {
-        val admitted = batch.join(
-          verdicts.filter(col("admit") === 0L).select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-        idx = idx.absorb(admitted)
-        absorbsSinceCollapse += 1
-        if (absorbsSinceCollapse >= collapseEvery) {
-          val old = idx
-          idx = old.collapsed
-          unpersistCheckpoints(old.hs)
-          corpusTable.foreach { t =>
-            graft.sources.Writers.compactBucketed(df.sparkSession, t)
-            idx = idx.copy(hs = df.sparkSession.table(t))
-          }
-          absorbsSinceCollapse = 0
-        }
-      }
-      unpersistCheckpoints(batch, verdicts)
-    }
+      corpusTable: Option[String] = None)
+      extends NoveltyGate(corpusDocs, collapseEvery, corpusTable) {
+    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) =
+      noveltyWithScratch(batch, index)
   }
 
   /** Start the gate: new docs stream into foreachBatch against the
@@ -231,12 +189,7 @@ object SpanGate {
       trigger: Trigger = Trigger.ProcessingTime(0),
       corpusTable: Option[String] = None): StreamingQuery = {
     val state = new SpanGateState(corpusDocs, CollapseEvery, corpusTable)
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) => state.process(df, id, sink) }
-      .start()
+    Gate.start(newDocs, checkpointDir, trigger)(state.process(_, _, sink))
   }
 
   /** Batch analog for the oracle gate: every doc_id % 4 == 0 document

@@ -136,18 +136,8 @@ object TelemetryMonitor {
       drift: DriftMonitor = new DriftMonitor()): StreamingQuery = {
     val st = statsTable.map(t => trainStatsDisk(corpusEvents, t))
       .getOrElse(trainStats(corpusEvents))
-    newEvents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = df.localCheckpoint(true)
-        val verdicts = score(batch, st).localCheckpoint(true)
-        sink(verdicts, id)
-        drift.observe(verdicts.count(), batch.count())
-        DedupGate.unpersistCheckpoints(batch, verdicts)
-      }
-      .start()
+    Gate.startFrozen(newEvents, checkpointDir, trigger, sink)(score(_, st),
+      (batch, verdicts) => drift.observe(verdicts.count(), batch.count()))
   }
 
   /** Batch analog for the oracle gate: every event_id % 4 == 0 event

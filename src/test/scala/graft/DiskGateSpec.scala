@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.DedupGate
+import graft.streaming.{DedupGate, Gate, SpanGate}
 
 /** The disk-backed gate corpus index (the 100 TB verify posture) must
   * be (a) semantics-preserving — identical hits to the in-memory
@@ -222,33 +222,24 @@ class DiskGateSpec extends SparkSpec {
   }
 
   test("disk gate self-compacts its content table on the collapse cadence") {
-    val table = "graft_spec_gate_selfcompact"
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river bank"))
-      .toDF("doc_id", "text")
-    val state = new DedupGate.TextGateState(corpus,
-      collapseEvery = 2, corpusTable = Some(table))
-    state.process(
-      Seq((100L, "totally unrelated text with no overlap whatsoever in any shingle"))
-        .toDF("doc_id", "text"), 0L, (_, _) => ())
-    // second absorb triggers collapse -> automatic compaction
-    state.process(
-      Seq((200L, "more fresh content entirely distinct from previous documents here"))
-        .toDF("doc_id", "text"), 1L, (_, _) => ())
-    val files = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files <= DedupGate.GateCorpusBuckets,
-      s"collapse did not compact the content table: $files files")
-    // post-compaction index still verifies against all absorbed docs
-    val hits = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    state.process(
-      Seq((300L, "more fresh content entirely distinct from previous sentences here"))
-        .toDF("doc_id", "text"), 2L, (df, _) => hits ++= df
-        .select(col("new_doc"), col("dup_of")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
-    assert(hits.toSet == Set((300L, 200L)),
-      s"gate lost absorbed content after self-compaction: $hits")
+    cadenceGates.foreach { g =>
+      val table = s"graft_spec_gate_selfcompact_${g.name}"
+      def files = new java.io.File(
+        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
+        .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+      val gate = g.run(Some(table))
+      gate.absorb(0)
+      val beforeCollapse = files
+      // the second absorb triggers collapse -> automatic compaction,
+      // which rewrites every file of the table
+      gate.absorb(1)
+      val after = files
+      assert(after.size <= DedupGate.GateCorpusBuckets && after.intersect(beforeCollapse).isEmpty,
+        s"${g.name}: collapse did not compact the content table: $beforeCollapse -> $after")
+      // post-compaction index still verifies against all absorbed rows
+      assert(gate.flagged() == Set(300L, 301L),
+        s"${g.name}: gate lost absorbed content after self-compaction")
+    }
   }
 
   test("gate restart rebuilds the content table from the snapshot: no stale accretion") {
@@ -282,33 +273,80 @@ class DiskGateSpec extends SparkSpec {
   }
 
   test("collapse unpersists the superseded arms' checkpoint blocks immediately") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river bank"))
-      .toDF("doc_id", "text")
-    val state = new DedupGate.TextGateState(corpus, collapseEvery = 2)
-    state.process(
-      Seq((100L, "totally unrelated text with no overlap whatsoever in any shingle"))
-        .toDF("doc_id", "text"), 0L, (_, _) => ())
-    // pre-collapse arms: snapshot + one increment per frame
-    val pre = (ckptIds(state.index.sh) ++ ckptIds(state.index.bands)).toSet
-    assert(pre.nonEmpty, "expected checkpointed arms before the collapse")
-    // second absorb triggers the collapse
-    state.process(
-      Seq((200L, "more fresh content entirely distinct from previous documents here"))
-        .toDF("doc_id", "text"), 1L, (_, _) => ())
-    val live = spark.sparkContext.getPersistentRDDs.keySet
-    val leaked = pre.intersect(live)
-    assert(leaked.isEmpty,
-      s"superseded arms still persisted after collapse: RDD ids $leaked")
-    // and the collapsed index still answers: a near-dup of the
-    // batch-0 admit is caught post-collapse
-    val hits = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    state.process(
-      Seq((300L, "totally unrelated text with no overlap whatsoever in any sentence"))
-        .toDF("doc_id", "text"), 2L, (df, _) => hits ++= df
-        .select(col("new_doc"), col("dup_of")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
-    assert(hits.toSet == Set((300L, 100L)),
-      s"post-collapse index lost absorbed content: $hits")
+    cadenceGates.foreach { g =>
+      val gate = g.run(None)
+      gate.absorb(0)
+      // pre-collapse arms: snapshot + one increment per frame
+      val pre = gate.arms.flatMap(ckptIds).toSet
+      assert(pre.nonEmpty, s"${g.name}: expected checkpointed arms before the collapse")
+      // the second absorb triggers the collapse
+      gate.absorb(1)
+      val leaked = pre.intersect(spark.sparkContext.getPersistentRDDs.keySet)
+      assert(leaked.isEmpty,
+        s"${g.name}: superseded arms still persisted after collapse: RDD ids $leaked")
+      // and the collapsed index still answers: copies of both absorbed
+      // rows are caught post-collapse
+      assert(gate.flagged() == Set(300L, 301L),
+        s"${g.name}: post-collapse index lost absorbed content")
+    }
+  }
+
+  /** An absorbing gate under the collapse-cadence tests, built with
+    * collapseEvery = 2 and an optional content table. */
+  private final case class CadenceGate(name: String, run: Option[String] => CadenceRun)
+
+  /** Batches 0 and 1 each absorb one fresh row (ids 100 and 200);
+    * [[flagged]] runs batch 2 — copies of both under ids 300 and 301 —
+    * and returns the ids its verdicts flag. */
+  private trait CadenceRun {
+    def absorb(batch: Int): Unit
+    def arms: Seq[DataFrame]
+    def flagged(): Set[Long]
+  }
+
+  private def cadenceRun[I <: Gate.Index[I]](state: Gate.Absorbing[I],
+      batch: Int => DataFrame, flaggedIds: DataFrame => Seq[Long]): CadenceRun =
+    new CadenceRun {
+      def absorb(i: Int): Unit = state.process(batch(i), i.toLong, (_, _) => ())
+      def arms: Seq[DataFrame] = state.index.arms
+      def flagged(): Set[Long] = {
+        val out = scala.collection.mutable.ArrayBuffer[Long]()
+        state.process(batch(2), 2L, (df, _) => out ++= flaggedIds(df))
+        out.toSet
+      }
+    }
+
+  private lazy val cadenceGates: Seq[CadenceGate] = {
+    val corpusText =
+      Seq((1L, "the quick brown fox jumps over the lazy dog near the river bank"))
+        .toDF("doc_id", "text")
+    val texts = Map(
+      100L -> "totally unrelated text with no overlap whatsoever in any shingle",
+      200L -> "more fresh content entirely distinct from previous documents here")
+    def docs(i: Int) = (i match {
+      case 0 => Seq(100L -> texts(100L))
+      case 1 => Seq(200L -> texts(200L))
+      case _ => Seq(300L -> texts(100L), 301L -> texts(200L))
+    }).toDF("doc_id", "text")
+    val rng = new java.util.Random(23)
+    def vec() = Array.fill(64)(rng.nextGaussian().toFloat)
+    val corpusVecs = Seq((1L, vec())).toDF("vec_id", "embedding")
+    val (v100, v200) = (vec(), vec())
+    def vecs(i: Int) = (i match {
+      case 0 => Seq(100L -> v100)
+      case 1 => Seq(200L -> v200)
+      case _ => Seq(300L -> v100, 301L -> v200)
+    }).toDF("vec_id", "embedding")
+    def ids(df: DataFrame, c: String) = df.select(col(c)).collect().map(_.getLong(0)).toSeq
+    Seq(
+      CadenceGate("text", t => cadenceRun(
+        new DedupGate.TextGateState(corpusText, collapseEvery = 2, corpusTable = t),
+        docs, ids(_, "new_doc"))),
+      CadenceGate("embed", t => cadenceRun(
+        new DedupGate.EmbedGateState(corpusVecs, collapseEvery = 2, corpusTable = t),
+        vecs, ids(_, "new_vec"))),
+      CadenceGate("span", t => cadenceRun(
+        new SpanGate.SpanGateState(corpusText, collapseEvery = 2, corpusTable = t),
+        docs, v => ids(v.filter(col("admit") === 0L), "doc_id"))))
   }
 }
