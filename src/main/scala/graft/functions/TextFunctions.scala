@@ -21,8 +21,10 @@ object TextFunctions {
     regexp_extract_all(lower(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
 
   /** Word n-gram shingles (distinct per doc) from a `text` column —
-    * returns a DataFrame of (idCol, shingle). The transform stays
-    * columnar: sequence + transform + explode, no UDTF.
+    * returns a DataFrame of (idCol, shingle): the explode of
+    * [[shingleSet]]'s per-document array, built from the same column
+    * ([[shingleArray]]). The transform stays columnar: sequence +
+    * transform + explode, no UDTF.
     * At scale this is the fan-out stage of MinHash/Jaccard dedup; it
     * pipelines inside the scan stage (no shuffle until the consumer
     * groups by shingle).
@@ -30,14 +32,12 @@ object TextFunctions {
     * PRECONDITION (round-21, ADVICE r20): `idCol` must be ROW-UNIQUE
     * in `df` — per-id distinctness is row-local (array_distinct), so
     * two rows sharing an id would double-count their shared shingles
-    * (`count == set size` consumers like DedupGate's verify break).
-    * Every corpus caller keys by the row-unique doc_id; the streaming
-    * gate dedupes its batch ids at the batch boundary
-    * ([[graft.streaming.DedupGate.TextGateState.process]]) before
-    * shingling, and the one non-row-unique caller (kmvHashesOf)
+    * (`count == set size` consumers break). Every corpus caller keys
+    * by the row-unique doc_id; the streaming gates dedupe their batch
+    * ids at the batch boundary ([[graft.streaming.Gate.Absorbing]])
+    * before shingling, and the one non-row-unique caller (kmvHashesOf)
     * re-dedupes downstream on its own (source, h) key. */
-  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val parts = (0 until n).map(j => s"toks[i+$j]").mkString(", ' ', ")
+  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     // per-id distinctness is ROW-LOCAL (round-20 optimization pass):
     // array_distinct before the explode replaces the old frame-level
     // .distinct(), which paid a full exchange of the shingle fan-out —
@@ -45,11 +45,27 @@ object TextFunctions {
     // caller either keys by a row-unique id (doc_id — identical result
     // set by construction) or re-deduplicates downstream on its own
     // coarser key (kmvHashesOf's (source, h) distinct).
+    tokenRows(df, idCol, textCol, n)
+      .select(col(idCol), explode(shingleArray(n)).as("shingle"))
+
+  /** Word n-gram shingle SETS: one (idCol, shingles) row per document
+    * with at least `n` tokens, `shingles` its distinct n-grams as an
+    * array — what set-intersection verify reads
+    * (`size(array_intersect(a, b))` is the shared-shingle count).
+    * Same precondition as [[shingles]]. */
+  def shingleSet(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
+    tokenRows(df, idCol, textCol, n)
+      .select(col(idCol), shingleArray(n).as("shingles"))
+
+  private def tokenRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol), tokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= n)
-      .select(col(idCol),
-        explode(array_distinct(expr(
-          s"transform(sequence(0, size(toks)-$n), i -> concat($parts))"))).as("shingle"))
+
+  /** The distinct word n-grams of the `toks` column — the ONE
+    * definition behind [[shingles]] and [[shingleSet]]. */
+  private def shingleArray(n: Int): Column = {
+    val parts = (0 until n).map(j => s"toks[i+$j]").mkString(", ' ', ")
+    array_distinct(expr(s"transform(sequence(0, size(toks)-$n), i -> concat($parts))"))
   }
 
   /** Ordered-bigram fan-out: one (idCol, prev, w) row per adjacent

@@ -57,7 +57,7 @@ object Dedup {
   // ------------------------------------------------- n-gram Jaccard exact
 
   /** Shingle-set sizes per doc. */
-  private[graft] def shingleSizes(sh: DataFrame): DataFrame =
+  private def shingleSizes(sh: DataFrame): DataFrame =
     sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
 
   /** Exact all-pairs 3-gram Jaccard >= 0.5 — GROUND-TRUTH-ONLY: the
@@ -85,24 +85,29 @@ object Dedup {
       shingleSizes(sh))
   }
 
-  /** shared-counts + per-doc set sizes -> Jaccard >= 0.5, the ONE
-    * definition of the verify formula and threshold shared by the
-    * exact path, the LSH path, and the streaming gate (sizesA/sizesB
-    * separate so asymmetric callers — gate new-vs-corpus — reuse it;
-    * symmetric callers pass the same frame twice). */
-  private[graft] def jaccardOnPairs(
-      shared: DataFrame, sizesA: DataFrame, sizesB: DataFrame): DataFrame =
-    shared
-      .join(sizesA.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizesB.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        (col("shared").cast(DoubleType) /
-          (col("na") + col("nb") - col("shared"))).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
-      .orderBy(col("doc_a"), col("doc_b"))
+  /** The near-dup threshold every Jaccard verify applies to
+    * [[jaccard]]: exact path, LSH path and streaming gate alike. */
+  val JaccardThreshold = 0.5
 
+  /** The Jaccard of two shingle sets from the shared count and the two
+    * set sizes, |A∩B| / (|A| + |B| - |A∩B|) as a double — the ONE
+    * definition of the verify formula. Batch callers pass counts, the
+    * streaming gate array sizes; the double is the same either way.
+    * The threshold stays a separate filter on the named column so the
+    * batch plans keep their `jaccard >= 0.5` predicate unchanged. */
+  private[graft] def jaccard(shared: Column, na: Column, nb: Column): Column =
+    shared.cast(DoubleType) / (na + nb - shared)
+
+  /** shared-counts + per-doc set sizes -> Jaccard >= 0.5 pairs, the
+    * verify step of the exact path and the LSH path. */
   private def jaccardOnPairs(shared: DataFrame, sizes: DataFrame): DataFrame =
-    jaccardOnPairs(shared, sizes, sizes)
+    shared
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"), col("shared"),
+        jaccard(col("shared"), col("na"), col("nb")).as("jaccard"))
+      .filter(col("jaccard") >= JaccardThreshold)
+      .orderBy(col("doc_a"), col("doc_b"))
 
   // ----------------------------------------------------------- MinHash+LSH
 
@@ -310,19 +315,16 @@ object Dedup {
       .join(s.table(table), Seq("doc_a", "doc_b"), "left_anti")
       .write.mode("append").bucketBy(PairIndexBuckets, "doc_b").sortBy("doc_b")
       .saveAsTable(table)
-    // INVALIDATE the derived cluster-label table (round-21, ADVICE
-    // r20 medium): the graft_cc_* label index is CC over this pair
-    // table, so an append makes it stale — without this drop the five
-    // label consumers served frozen pre-append clusters for the rest
-    // of the JVM, contradicting the documented contract above
-    // ("cluster and corpus-clean queries reflect the expanded
-    // corpus"). Dropping the table is sufficient: clusterIndex's
-    // fresh-session self-heal sees tableExists == false and rebuilds
-    // from the updated pairs on the next label read. Gate-private
-    // pair tables (non-graft_pairs_* names) derive no label index —
-    // nothing to invalidate there.
+    // INVALIDATE the derived cluster-label table: the graft_cc_* label
+    // index is CC over this pair table, so an append makes it stale.
+    // Only its CATALOG ENTRY goes: clusterIndex's self-heal sees
+    // tableExists == false and rebuilds from the updated pairs on the
+    // next label read (through replaceBucketed, which clears the old
+    // location then), while a label frame taken before this append
+    // keeps reading the files it listed. Gate-private pair tables
+    // (non-graft_pairs_* names) derive no label index.
     if (table.startsWith("graft_pairs_"))
-      graft.sources.Writers.dropWithLocation(
+      graft.sources.Writers.dropCatalogEntry(
         s, table.replaceFirst("^graft_pairs_", "graft_cc_"))
   }
 

@@ -82,6 +82,24 @@ object Writers {
     ()
   }
 
+  /** Drop a saved table's catalog entry but leave its files: frames
+    * already resolved against the table keep reading the files they
+    * listed, and the next [[replaceBucketed]] of the name clears the
+    * location before it writes. The entry is made EXTERNAL first,
+    * because dropping a managed table deletes its directory. */
+  private[graft] def dropCatalogEntry(
+      s: org.apache.spark.sql.SparkSession, table: String): Unit = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+    val catalog = s.sessionState.catalog
+    val id = TableIdentifier(table)
+    if (catalog.tableExists(id)) {
+      catalog.alterTable(
+        catalog.getTableMetadata(id).copy(tableType = CatalogTableType.EXTERNAL))
+      s.sql(s"DROP TABLE IF EXISTS ${quoted(table)}")
+    }
+  }
+
   /** Backtick-quote a table identifier for raw-SQL interpolation —
     * hostile or reserved names must not break (or inject into) the
     * DDL the maintenance paths issue. */

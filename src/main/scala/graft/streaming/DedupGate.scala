@@ -24,9 +24,12 @@ import graft.operators.Dedup
   *  3. earlier batches — every batch's ADMITTED docs are folded into
   *     the gate index ([[TextIndex.absorb]] / [[EmbedIndex.absorb]]):
   *     each increment is checkpointed once and unioned in, so
-  *     per-batch cost is the increment only. Replayed batches (at-
-  *     least-once foreachBatch) are not re-absorbed: the batchId guard
-  *     makes absorption exactly-once per batch id.
+  *     per-batch cost is the increment only. The text gate absorbs the
+  *     shingle sets and band rows its verify already built for the
+  *     batch: each document is shingled and MinHashed once per
+  *     trigger. Replayed batches (at-least-once foreachBatch) are not
+  *     re-absorbed: the batchId guard makes absorption exactly-once per
+  *     batch id.
   *
   * The per-batch state machine — boundary id dedup, the replay guard,
   * the [[CollapseEvery]] cadence that collapses the union arms and
@@ -39,11 +42,12 @@ import graft.operators.Dedup
   * ==The 100 TB verify stage: disk-backed corpus content==
   *
   * Candidates come from equi-joins on the band key against a SLIM
-  * index (3 ints per corpus band). Exact verification (shared-shingle
-  * Jaccard / two-stage cosine, the shared [[Dedup.jaccardOnPairs]] /
-  * [[Dedup.cosineVerify]] helpers so gate and batch semantics cannot
-  * drift) needs the CONTENT — shingle sets / vectors — of candidate
-  * dup_of docs only. Holding that content as cluster-memory frames and
+  * index (3 ints per corpus band). Exact verification (Jaccard by set
+  * intersection of per-document shingle arrays / two-stage cosine, the
+  * shared [[Dedup.jaccard]] / [[Dedup.cosineVerify]] helpers so gate
+  * and batch semantics cannot drift) needs the CONTENT — shingle sets /
+  * vectors — of candidate dup_of docs only. Holding that content as
+  * cluster-memory frames and
   * joining candidates into ALL of it (the pre-round-9 shape) is a full
   * corpus pass per trigger at 100 TB. The scale path is
   * [[indexCorpusDisk]] / [[indexEmbedCorpusDisk]]: corpus content
@@ -160,58 +164,61 @@ object DedupGate {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Distinct candidate ids, collected iff there are at most
-    * [[MaxVerifyIds]] of them (the limit bounds the transfer BEFORE
-    * the driver materializes anything); None = over the cap, caller
-    * must take the join-based verify path. */
-  private def collectIdsCapped(cand: DataFrame, idCol: String): Option[Seq[Long]] = {
-    val ids = cand.select(col(idCol)).distinct().limit(MaxVerifyIds + 1)
-      .collect().map(_.getLong(0)).toSeq
-    if (ids.size <= MaxVerifyIds) Some(ids)
-    else {
+  /** The ids of the one-column frame `ids` (distinct by construction),
+    * collected iff there are at most [[MaxVerifyIds]] of them (the limit
+    * bounds the transfer BEFORE the driver materializes anything);
+    * None = over the cap. */
+  private[streaming] def idsCapped(ids: DataFrame): Option[Seq[Long]] = {
+    val got = ids.limit(MaxVerifyIds + 1).collect().map(_.getLong(0)).toSeq
+    if (got.size <= MaxVerifyIds) Some(got) else None
+  }
+
+  /** [[idsCapped]] for the verify stage's candidate ids; None = over
+    * the cap, caller must take the join-based verify path. */
+  private def collectIdsCapped(ids: DataFrame): Option[Seq[Long]] = {
+    val got = idsCapped(ids)
+    if (got.isEmpty)
       log.warn(s"gate verify: > $MaxVerifyIds distinct candidate ids — " +
         "falling back to join-based verify (one corpus-content pass this " +
         "batch). Persistent storms mean the banding admits too much: switch " +
         "to a stricter EmbedBanding or widen text bands.")
-      None
-    }
+    got
   }
 
   /** Corpus snapshot pre-processed for the text gate: shingle content
-    * (in-memory frame OR bucketed on-disk table — `table` set) and the
-    * slim band index. [[absorb]] extends it with admitted docs between
-    * snapshots. (Set SIZES are recomputed from the pruned shingle rows
-    * at verify time — `count(*)` over rows that are distinct per doc
-    * by construction — so no sizes frame is maintained.) */
+    * as (doc_id, shingle) rows (in-memory frame OR bucketed on-disk
+    * table — `table` set) and the slim band index. [[absorb]] extends
+    * it with admitted docs between snapshots. Set sizes are read off
+    * the per-document arrays at verify time, so no sizes frame is
+    * maintained. */
   final case class TextIndex(sh: DataFrame, bands: DataFrame,
       table: Option[String] = None) extends Gate.Index[TextIndex] {
 
-    /** Verify-stage read: shingle rows for exactly `ids`
-      * ([[Gate.contentFor]]). */
-    def shinglesFor(ids: Seq[Long]): DataFrame =
-      Gate.contentFor(sh, table, Seq("doc_id", "shingle"), ids)
+    /** Verify-stage read: (doc_id, shingles) sets for exactly `ids`
+      * ([[Gate.contentFor]] — on disk the grouping rides the pruned
+      * read's eager checkpoint). */
+    def setsFor(ids: Seq[Long]): DataFrame =
+      Gate.contentFor(sh, table, ShCols, ids, perDocSets)
 
-    /** Over-[[MaxVerifyIds]] form of [[shinglesFor]]
-      * ([[Gate.contentForJoin]]). */
-    def shinglesForJoin(idsDf: DataFrame): DataFrame =
-      Gate.contentForJoin(sh, table, Seq("doc_id", "shingle"), idsDf)
+    /** Over-[[MaxVerifyIds]] form of [[setsFor]]
+      * ([[Gate.contentForJoin]]), grouped the same way. */
+    def setsForJoin(idsDf: DataFrame): DataFrame =
+      perDocSets(Gate.contentForJoin(sh, table, ShCols, idsDf))
 
-    /** Fold admitted docs in so later batches see them: the increment
-      * is checkpointed ONCE, eagerly (so the source batch frame can be
-      * dropped by the caller), and unioned into the slim frames;
-      * disk-backed content is APPENDED to the bucketed table
-      * ([[Gate.appendContent]]) instead of growing a union arm. */
-    def absorb(admittedDocs: DataFrame): TextIndex = {
-      import graft.functions.TextFunctions.shingles
-      val shA = shingles(admittedDocs, "doc_id", "text").localCheckpoint(true)
-      val next = TextIndex(Gate.appendContent(sh, shA, table, "doc_id"),
-        bands.unionAll(
-          Dedup.lshBands(Dedup.minhashSignatures(shA)).localCheckpoint(true)),
-        table)
-      // disk mode: shA's content now lives in the table and the bands
-      // increment is already materialized — drop it
-      if (table.isDefined) unpersistCheckpoints(shA)
-      next
+    /** Fold admitted docs in so later batches see them, from what
+      * verify already built: `sets` — their (doc_id, shingles) arrays —
+      * and `newBands` — their band rows. Nothing is shingled or
+      * MinHashed again. In memory the content increment is checkpointed
+      * once, eagerly, and unioned in; disk-backed content is APPENDED
+      * to the bucketed table ([[Gate.appendContent]]) straight from
+      * `sets`. The band increment is checkpointed eagerly either way,
+      * so the caller can drop the frames it came from. */
+    def absorb(sets: DataFrame, newBands: DataFrame): TextIndex = {
+      val rows = sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
+      TextIndex(
+        Gate.appendContent(sh, if (table.isDefined) rows else rows.localCheckpoint(true),
+          table, "doc_id"),
+        bands.unionAll(newBands.localCheckpoint(true)), table)
     }
 
     /** Collapse the accumulated union arms into one eagerly
@@ -222,6 +229,15 @@ object DedupGate {
     def arms: Seq[DataFrame] = Seq(sh, bands)
     def remount(content: DataFrame): TextIndex = copy(sh = content)
   }
+
+  /** The text content columns; `doc_id` keys the content table. */
+  private val ShCols = Seq("doc_id", "shingle")
+
+  /** (doc_id, shingle) content rows grouped to one (doc_id, shingles)
+    * array per document — the rows are distinct per doc, so the array
+    * size is the set size. */
+  private def perDocSets(rows: DataFrame): DataFrame =
+    rows.groupBy(col("doc_id")).agg(collect_list(col("shingle")).as("shingles"))
 
   def indexCorpus(corpusDocs: DataFrame): TextIndex = {
     import graft.functions.TextFunctions.shingles
@@ -244,40 +260,43 @@ object DedupGate {
   /** New docs vs the index AND vs each other: DISTINCT candidate pairs
     * from (a) the new-bands x corpus-bands join and (b) the new-bands
     * self-join (higher id flagged as the newcomer — keep-lowest-id),
-    * then exact Jaccard >= 0.5 verified ONCE per pair via
-    * [[Dedup.jaccardOnPairs]] (the one definition of formula and
+    * then exact Jaccard >= 0.5 verified ONCE per pair by set
+    * intersection of the two shingle arrays ([[Dedup.jaccard]] and
+    * [[Dedup.JaccardThreshold]], the one definition of formula and
     * threshold). Output (new_doc, dup_of, jaccard), pair-unique.
     *
     * The dup_of side of verification draws from corpus content for ids
     * the corpus holds (a re-ingested id is verified against its CORPUS
     * content — the question the gate answers is "is this a dup of what
-    * the corpus already holds") and from the batch's own shingles for
-    * intra-batch-only ids — all through [[TextIndex.shinglesFor]], the
+    * the corpus already holds") and from the batch's own sets for
+    * intra-batch-only ids — all through [[TextIndex.setsFor]], the
     * pruned O(candidates) read (module doc). The candidate id list is
     * a bounded driver collect: O(batch x band fan-out) longs, the
     * same order the driver already holds for the batch itself. */
   def duplicates(newDocs: DataFrame, corpus: TextIndex): DataFrame =
-    duplicatesWithScratch(newDocs, corpus)._1
+    verifyText(newDocs, corpus).verdicts
 
-  /** [[duplicates]] plus the per-call checkpoint frames ("scratch") the
-    * result plan reads from. A long-running gate must drop those blocks
-    * as soon as the batch's verified result is materialized — waiting
-    * on driver GC + ContextCleaner accretes O(batch+candidates) blocks
-    * per trigger (the round-8 memory-hygiene class of bug). Batch
-    * analogs (the q* oracle queries) use the plain [[duplicates]] and
-    * let one-shot GC handle it. The scratch list contains ONLY
-    * checkpoints created by this call — never the corpus index's own
-    * frames (the in-memory shinglesFor path returns a filter OVER the
-    * index, which is why shCorpusCand joins the list only in disk
-    * mode, where it is a fresh checkpoint). */
-  private def duplicatesWithScratch(
-      newDocs: DataFrame, corpus: TextIndex): (DataFrame, Seq[DataFrame]) = {
-    import graft.functions.TextFunctions.shingles
-    // the new-docs shingle set feeds bands + shared-count + sizes —
-    // same materialize-once rationale as qMinhashLsh
-    val shNew = shingles(newDocs, "doc_id", "text").localCheckpoint(false)
-    val bandsNew = Dedup.lshBands(Dedup.minhashSignatures(shNew))
-      .localCheckpoint(false) // feeds the corpus join AND the self-join
+  /** [[duplicates]] as a [[Gate.Verified]]: the verdicts, the per-call
+    * checkpoint frames ("scratch") the verdict plan and the absorb
+    * read, and the absorb of the admitted docs from the batch's own
+    * shingle sets and band rows — one shingling and one MinHash per
+    * batch document. A long-running gate drops the scratch blocks once
+    * the batch is absorbed — waiting on driver GC + ContextCleaner
+    * accretes O(batch+candidates) blocks per trigger (the round-8
+    * memory-hygiene class of bug). Batch analogs (the q* oracle
+    * queries) use the plain [[duplicates]] and let one-shot GC handle
+    * it. The scratch list contains ONLY checkpoints created by this
+    * call — never the corpus index's own frames (the in-memory setsFor
+    * path is a lazy grouping OVER the index, which is why it joins the
+    * list only in disk mode, where it is a fresh checkpoint). */
+  private def verifyText(newDocs: DataFrame, corpus: TextIndex): Gate.Verified[TextIndex] = {
+    import graft.functions.TextFunctions.shingleSet
+    // the new-docs shingle sets feed bands, both verify sides and the
+    // absorb — same materialize-once rationale as qMinhashLsh
+    val setNew = shingleSet(newDocs, "doc_id", "text").localCheckpoint(false)
+    val bandsNew = Dedup.lshBands(Dedup.minhashSignatures(
+        setNew.select(col("doc_id"), explode(col("shingles")).as("shingle"))))
+      .localCheckpoint(false) // feeds the corpus join, the self-join and the absorb
     val candCorpus = bandsNew
       .join(corpus.bands.select(col("doc_id").as("dup_of"),
         col("band_id"), col("band_hash")), Seq("band_id", "band_hash"))
@@ -291,45 +310,45 @@ object DedupGate {
         col("x.band_hash") === col("y.band_hash") &&
         col("x.doc_id") > col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    // checkpointed: the candidate set feeds the id collect AND the
-    // shared-shingle join — band joins must not run twice
-    val cand = candCorpus.unionAll(candIntra).distinct().localCheckpoint(false)
-    // dup_of-side content, candidate ids ONLY: corpus content first
-    // (bucket-pruned on a disk index), batch shingles for the ids the
-    // corpus lacks; sizes recomputed from the same pruned rows
-    // (shingles() is distinct per doc, so count == set size). The id
-    // collect is capped — a dup storm over MaxVerifyIds degrades to
-    // the join-based read instead of exhausting the driver.
-    // (shCandScratch: the paths that create a FRESH checkpoint — the
-    // disk-mode pruned read, or the fallback join which is always
-    // materialized once so the corpus pass cannot run twice — must
-    // hand it to the caller's cleanup; the in-memory pruned path is a
-    // filter OVER the index and owns no blocks)
-    val (shCorpusCand, shCandScratch) =
-      collectIdsCapped(cand, "doc_b") match {
+    // one row per candidate dup_of id with the new docs it pairs with:
+    // pair-unique and id-unique from ONE aggregation, so the id collect
+    // reads the checkpoint without another shuffle. Checkpointed: it
+    // feeds the id collect AND the verdict joins — band joins must not
+    // run twice
+    val candByB = candCorpus.unionAll(candIntra)
+      .groupBy(col("doc_b")).agg(collect_set(col("doc_a")).as("doc_as"))
+      .localCheckpoint(false)
+    val cand = candByB.select(explode(col("doc_as")).as("doc_a"), col("doc_b"))
+    // dup_of-side sets, candidate ids ONLY: corpus content first
+    // (bucket-pruned on a disk index), batch sets for the ids the
+    // corpus lacks. The id collect is capped — a dup storm over
+    // MaxVerifyIds degrades to the join-based read instead of
+    // exhausting the driver. (setCandScratch: the paths that create a
+    // FRESH checkpoint — the disk-mode pruned read, or the fallback
+    // join which is always materialized once so the corpus pass cannot
+    // run twice — must hand it to the caller's cleanup; the in-memory
+    // pruned path is a lazy grouping OVER the index and owns no blocks)
+    val (setCorpusCand, setCandScratch) =
+      collectIdsCapped(candByB.select(col("doc_b"))) match {
         case Some(bIds) =>
-          val df = corpus.shinglesFor(bIds)
+          val df = corpus.setsFor(bIds)
           (df, if (corpus.table.isDefined) Seq(df) else Nil)
         case None =>
-          val df = corpus.shinglesForJoin(
-            cand.select(col("doc_b")).distinct()).localCheckpoint(true)
+          val df = corpus.setsForJoin(candByB.select(col("doc_b")))
+            .localCheckpoint(true)
           (df, Seq(df))
       }
-    val corpusCandIds = shCorpusCand.select(col("doc_id")).distinct()
-    val shB = shCorpusCand.unionAll(
-      shNew.join(corpusCandIds, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("shingle")))
-    val sizesB = shB.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val sizesNew = Dedup.shingleSizes(shNew)
-    val shared = cand
-      .join(shNew.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-      .join(shB.select(col("doc_id").as("doc_b"), col("shingle")),
-        Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    val result = Dedup.jaccardOnPairs(shared, sizesNew, sizesB)
-      .select(col("doc_a").as("new_doc"), col("doc_b").as("dup_of"), col("jaccard"))
-    (result, Seq(shNew, bandsNew, cand) ++ shCandScratch)
+    val setB = setCorpusCand.unionAll(
+      setNew.join(setCorpusCand.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    val result = cand
+      .join(setNew.select(col("doc_id").as("doc_a"), col("shingles").as("a")), "doc_a")
+      .join(setB.select(col("doc_id").as("doc_b"), col("shingles").as("b")), "doc_b")
+      .select(col("doc_a").as("new_doc"), col("doc_b").as("dup_of"),
+        Dedup.jaccard(size(array_intersect(col("a"), col("b"))),
+          size(col("a")), size(col("b"))).as("jaccard"))
+      .filter(col("jaccard") >= Dedup.JaccardThreshold)
+    Gate.Verified(result, Seq(setNew, bandsNew, candByB) ++ setCandScratch,
+      admit => corpus.absorb(admit(setNew), admit(bandsNew)))
   }
 
   def duplicates(newDocs: DataFrame, corpusDocs: DataFrame): DataFrame =
@@ -366,8 +385,8 @@ object DedupGate {
       extends PairGate[TextIndex](
         corpusTable.fold(indexCorpus(corpusDocs))(indexCorpusDisk(corpusDocs, _)),
         "doc_id", "new_doc", pairTable, collapseEvery, corpusTable) {
-    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) =
-      duplicatesWithScratch(batch, index)
+    protected def verify(batch: DataFrame): Gate.Verified[TextIndex] =
+      verifyText(batch, index)
   }
 
   /** Start the gate: raw new docs stream into foreachBatch against the
@@ -672,7 +691,7 @@ object DedupGate {
     (result, candCount)
   }
 
-  /** See [[duplicatesWithScratch]] — same per-call cleanup contract.
+  /** See [[verifyText]] — same per-call cleanup contract.
     * Banding (layout/joins) and verify threshold both come from
     * `corpus.banding`, so a strict-config index verifies strictly.
     * The third element is a lazy candidate-pair count over the (still
@@ -696,9 +715,9 @@ object DedupGate {
     // checkpointed: feeds the id collect AND the vector join-back
     val cand = candCorpus.unionAll(candIntra).distinct().localCheckpoint(false)
     // capped collect, join-based fallback beyond it — see the text
-    // side ([[duplicatesWithScratch]]) for the scratch-tracking note
+    // side ([[verifyText]]) for the scratch-tracking note
     val (vecsCorpusCand, vecCandScratch) =
-      collectIdsCapped(cand, "vb") match {
+      collectIdsCapped(cand.select(col("vb")).distinct()) match {
         case Some(bIds) =>
           val df = corpus.vectorsFor(bIds)
           (df, if (corpus.table.isDefined) Seq(df) else Nil)
@@ -747,13 +766,13 @@ object DedupGate {
       * once the measured candidate rate has tripped the wire. */
     def escalationAdvice: Option[EmbedBanding] = monitor.advice
 
-    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    protected def verify(batch: DataFrame): Gate.Verified[EmbedIndex] = {
       val (dups, scratch, candCount) = embedDuplicatesWithScratch(batch, index)
       // the batch is counted once; the candidate count reads the frame
       // the candidate-id collect already materialized
       batchN = batch.count()
       monitor.observe(candCount(), batchN, corpusN)
-      (dups, scratch)
+      Gate.Verified(dups, scratch, admit => index.absorb(admit(batch)))
     }
 
     // admitted = batch minus the distinct flagged ids

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max_by, struct, xxhash64}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.Writers
@@ -61,8 +61,6 @@ object Gate {
   /** The index an [[Absorbing]] gate grows: immutable, each step returns
     * the next value. */
   trait Index[I] {
-    /** Fold admitted rows in so later batches see them. */
-    def absorb(admitted: DataFrame): I
     /** The union arms collapsed into one checkpointed frame each — pure:
       * the receiver stays valid until its [[arms]] are unpersisted. */
     def collapsed: I
@@ -73,15 +71,43 @@ object Gate {
     def remount(content: DataFrame): I
   }
 
+  /** What [[Absorbing.verify]] returns for one batch: the verdicts; the
+    * checkpoints this call created, which the verdict plan and `absorb`
+    * read (dropped once the batch is done); and `absorb(admit)`, the
+    * next index with the batch's admitted rows folded in, where `admit`
+    * keeps the rows of an id-keyed frame whose id the verdicts did not
+    * reject. A gate that already built the index rows of the batch
+    * while verifying (the text gate's shingle sets and band rows)
+    * absorbs those instead of building them again. */
+  final case class Verified[I](verdicts: DataFrame, scratch: Seq[DataFrame],
+      absorb: (DataFrame => DataFrame) => I)
+
+  /** The local property naming the [[Absorbing.process]] phase that
+    * launched a job — `batch`, `verify`, `verdict`, `sink`,
+    * `after_sink`, `absorb` or `collapse` — readable from
+    * `SparkListenerJobStart.properties`. */
+  val PhaseProperty = "graft.gate.phase"
+
+  /** One row per `idCol` value: of rows sharing an id, the one whose
+    * payload (every other column) has the greatest xxhash64, so the
+    * survivor of conflicting same-id payloads does not depend on
+    * arrival order or partitioning. One aggregation, one exchange. */
+  private[streaming] def oneRowPerId(df: DataFrame, idCol: String): DataFrame = {
+    val payload = df.columns.filterNot(_ == idCol).toSeq.map(col)
+    df.groupBy(col(idCol))
+      .agg(max_by(struct(payload: _*), xxhash64(payload: _*)).as("row"))
+      .select(df.columns.toSeq.map(c =>
+        if (c == idCol) col(c) else col("row").getField(c).as(c)): _*)
+  }
+
   /** Cross-batch state of an absorbing gate: the growing index plus the
     * exactly-once absorption guard, unit-testable without a streaming
     * harness. [[process]] is what `foreachBatch` invokes per micro-batch:
-    *  1. the batch is deduped on `idCol` and checkpointed eagerly, so an
-    *     id re-delivered within one batch (at-least-once sources) is one
-    *     row everywhere downstream;
-    *  2. [[verify]] returns the verdicts plus the scratch checkpoints its
-    *     plan reads; the verdicts are checkpointed eagerly and the
-    *     scratch dropped at once, not at driver GC;
+    *  1. the batch is reduced to one row per `idCol` ([[oneRowPerId]])
+    *     and checkpointed eagerly, so an id re-delivered within one
+    *     batch (at-least-once sources) is one row everywhere downstream;
+    *  2. [[verify]] returns a [[Verified]]; its verdicts are
+    *     checkpointed eagerly;
     *  3. the sink, then [[afterSink]];
     *  4. absorption is exactly-once per batch id: a replayed batch
     *     re-emits its verdicts but never re-absorbs. Admitted rows are
@@ -91,7 +117,13 @@ object Gate {
     *     `contentTable` is compacted — the gate is its single writer and
     *     [[process]] its only reader, so the catalog swap inside
     *     `compactBucketed` has no concurrent observer;
-    *  6. the batch and verdicts are unpersisted before return.
+    *  6. the verify scratch, the batch and the verdicts are unpersisted
+    *     before return, not at driver GC.
+    * Steps 3 and 4 stay sequential in that order: were the absorb run
+    * alongside the sink and a later step failed, the replayed batch
+    * would verify against its own absorbed rows. Every job a step
+    * launches carries its phase in the [[PhaseProperty]] local property;
+    * the caller's value is restored on return.
     * Consequence for `sink`: it must fully CONSUME its frame before
     * returning (collect/write inside the call, the normal foreachBatch
     * discipline) — the lineage-free checkpoint blocks are dropped after.
@@ -110,9 +142,9 @@ object Gate {
     /** Current index (corpus snapshot + absorbed increments). */
     def index: I = idx
 
-    /** Verdicts for `batch` against [[index]], plus the checkpoints
-      * created by this call that the verdict plan reads. */
-    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame])
+    /** Verdicts for `batch` against [[index]], the checkpoints created
+      * by this call, and how to absorb the batch's admitted rows. */
+    protected def verify(batch: DataFrame): Verified[I]
 
     /** Ids (column `idCol`) the verdicts reject; runs once per absorbed
       * batch id. */
@@ -121,45 +153,64 @@ object Gate {
     /** Runs after the sink, replays included. */
     protected def afterSink(batch: DataFrame, verdicts: DataFrame): Unit = ()
 
-    def process(df: DataFrame, id: Long, sink: (DataFrame, Long) => Unit): Unit = {
-      val batch = df.dropDuplicates(idCol).localCheckpoint(true)
-      val (raw, scratch) = verify(batch)
-      val verdicts = raw.localCheckpoint(true)
-      unpersistCheckpoints(scratch: _*)
-      sink(verdicts, id)
-      afterSink(batch, verdicts)
-      if (absorbedBatches.add(id)) {
-        idx = idx.absorb(batch.join(rejected(verdicts), Seq(idCol), "left_anti"))
-        absorbsSinceCollapse += 1
-        if (absorbsSinceCollapse >= collapseEvery) {
-          val old = idx
-          idx = old.collapsed // eager: the new copies exist before...
-          unpersistCheckpoints(old.arms: _*) // ...the old arms go
-          contentTable.foreach { t =>
-            Writers.compactBucketed(df.sparkSession, t)
-            idx = idx.remount(df.sparkSession.table(t))
-          }
-          absorbsSinceCollapse = 0
-        }
+    /** The `admit` filter for ids `rej`: a bounded driver collect
+      * replayed as a NOT IN filter, so absorbing several frames costs no
+      * join each; over [[DedupGate.MaxVerifyIds]] rejected ids, a
+      * left-anti join. Null ids are never rejected, as in the join. */
+    private def admission(rej: DataFrame): DataFrame => DataFrame =
+      DedupGate.idsCapped(rej.select(col(idCol)).distinct()) match {
+        case Some(ids) => _.filter(col(idCol).isNull || !col(idCol).isin(ids: _*))
+        case None => _.join(rej, Seq(idCol), "left_anti")
       }
-      unpersistCheckpoints(batch, verdicts)
+
+    def process(df: DataFrame, id: Long, sink: (DataFrame, Long) => Unit): Unit = {
+      val sc = df.sparkSession.sparkContext
+      val callerPhase = sc.getLocalProperty(PhaseProperty)
+      def phase[A](name: String)(step: => A): A = {
+        sc.setLocalProperty(PhaseProperty, name)
+        step
+      }
+      try {
+        val batch = phase("batch")(oneRowPerId(df, idCol).localCheckpoint(true))
+        val v = phase("verify")(verify(batch))
+        val verdicts = phase("verdict")(v.verdicts.localCheckpoint(true))
+        phase("sink")(sink(verdicts, id))
+        phase("after_sink")(afterSink(batch, verdicts))
+        if (absorbedBatches.add(id)) {
+          phase("absorb") { idx = v.absorb(admission(rejected(verdicts))) }
+          absorbsSinceCollapse += 1
+          if (absorbsSinceCollapse >= collapseEvery) phase("collapse") {
+            val old = idx
+            idx = old.collapsed // eager: the new copies exist before...
+            unpersistCheckpoints(old.arms: _*) // ...the old arms go
+            contentTable.foreach { t =>
+              Writers.compactBucketed(df.sparkSession, t)
+              idx = idx.remount(df.sparkSession.table(t))
+            }
+            absorbsSinceCollapse = 0
+          }
+        }
+        unpersistCheckpoints(v.scratch :+ batch :+ verdicts: _*)
+      } finally sc.setLocalProperty(PhaseProperty, callerPhase)
     }
   }
 
-  /** Verify-stage read: `cols` of `content` for exactly `ids`. On a
-    * disk-backed index (`table` set) the In-predicate on the bucket
-    * column engages bucket pruning + row-group skipping and the
-    * O(candidates) result is materialized eagerly — see
-    * [[DedupGate.prunedTableRead]] for why; in memory it is a
+  /** Verify-stage read: `cols` of `content` for exactly `ids`, shaped by
+    * `fold` (e.g. grouped per id). On a disk-backed index (`table` set)
+    * the In-predicate on the bucket column engages bucket pruning +
+    * row-group skipping, and the O(candidates) result is folded and
+    * materialized eagerly in the pruning session — a fold keyed by the
+    * bucket column reads the bucketed scan with no exchange; see
+    * [[DedupGate.prunedTableRead]] for why. In memory it is a lazy
     * partition-local filter of the checkpointed frame (and owns no
     * blocks). */
   def contentFor(content: DataFrame, table: Option[String], cols: Seq[String],
-      ids: Seq[Long]): DataFrame = table match {
+      ids: Seq[Long], fold: DataFrame => DataFrame = identity): DataFrame = table match {
     case Some(t) =>
-      DedupGate.prunedTableRead(content.sparkSession, t, cols.head, ids,
-        cols.map(col)).localCheckpoint(true)
+      fold(DedupGate.prunedTableRead(content.sparkSession, t, cols.head, ids,
+        cols.map(col))).localCheckpoint(true)
     case None =>
-      content.select(cols.map(col): _*).filter(col(cols.head).isin(ids: _*))
+      fold(content.select(cols.map(col): _*).filter(col(cols.head).isin(ids: _*)))
   }
 
   /** The over-[[DedupGate.MaxVerifyIds]] form of [[contentFor]]: a

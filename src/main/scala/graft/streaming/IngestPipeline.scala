@@ -98,8 +98,10 @@ object IngestPipeline {
 
     def spanIndex: SpanGate.SpanIndex = index
 
-    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) =
-      verdictsWithScratch(batch, lm, index)
+    protected def verify(batch: DataFrame): Gate.Verified[SpanGate.SpanIndex] = {
+      val (verdicts, scratch) = verdictsWithScratch(batch, lm, index)
+      Gate.Verified(verdicts, scratch, admit => index.absorb(admit(batch)))
+    }
   }
 
   /** Start the composed pipeline over a document stream. */

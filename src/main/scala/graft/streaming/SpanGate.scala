@@ -175,8 +175,10 @@ object SpanGate {
       collapseEvery: Int = CollapseEvery,
       corpusTable: Option[String] = None)
       extends NoveltyGate(corpusDocs, collapseEvery, corpusTable) {
-    protected def verify(batch: DataFrame): (DataFrame, Seq[DataFrame]) =
-      noveltyWithScratch(batch, index)
+    protected def verify(batch: DataFrame): Gate.Verified[SpanIndex] = {
+      val (verdicts, scratch) = noveltyWithScratch(batch, index)
+      Gate.Verified(verdicts, scratch, admit => index.absorb(admit(batch)))
+    }
   }
 
   /** Start the gate: new docs stream into foreachBatch against the

@@ -4,13 +4,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Dedup
-import graft.streaming.{DedupGate, IngestPipeline, SpanGate}
+import graft.streaming.{DedupGate, Gate, IngestPipeline, SpanGate}
 
 /** The shared absorbing-gate step: (a) the text gate's Spark jobs per
-  * micro-batch stay pinned, so the skeleton adds and drops none; (b)
-  * every absorbing gate dedups an id delivered twice in one batch, so
-  * the sink sees each verdict once and the index holds the id once. */
+  * micro-batch and phase stay pinned, so the skeleton adds and drops
+  * none unnoticed; (b) every absorbing gate dedups an id delivered
+  * twice in one batch, so the sink sees each verdict once and the
+  * index holds the id once. */
 class GateSkeletonSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,23 +24,25 @@ class GateSkeletonSpec extends SparkSpec {
       .deleteRecursively()
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
+  /** Spark jobs started while `f` runs, by their gate phase tag. */
+  private def jobsOf(f: => Unit): Map[String, Int] = {
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        phases.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty(Gate.PhaseProperty))).getOrElse("untagged"))
     }
     org.apache.spark.graft.TestBus.drain(sc)
     sc.addSparkListener(l)
     try { f; org.apache.spark.graft.TestBus.drain(sc) }
     finally sc.removeSparkListener(l)
-    n.get
+    phases.asScala.groupBy(identity).map { case (p, js) => p -> js.size }
   }
 
   /** One stream_mix-shaped gate run: two batches, one hit; the jobs of
-    * each `process` call. */
-  private def textGateJobs(tag: String): Seq[Int] = {
+    * each `process` call by phase. */
+  private def textGateJobs(tag: String): Seq[Map[String, Int]] = {
     val content = s"graft_spec_skeleton_content_$tag"
     val pairs = s"graft_spec_skeleton_pairs_$tag"
     Seq(content, pairs).foreach(freshTable)
@@ -77,7 +82,16 @@ class GateSkeletonSpec extends SparkSpec {
     spark.conf.set(aqe, "false")
     val jobs = try { textGateJobs("warm"); textGateJobs("pinned") }
       finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
-    assert(jobs == Seq(18, 19), s"text gate jobs per batch moved: $jobs")
+    // 17 and 18 in all (18 and 19 before the set-intersection verify);
+    // no collapse in two batches
+    val want = Seq(
+      Map("batch" -> 1, "verify" -> 5, "verdict" -> 4, "sink" -> 1,
+        "after_sink" -> 2, "absorb" -> 4),
+      Map("batch" -> 1, "verify" -> 6, "verdict" -> 4, "sink" -> 1,
+        "after_sink" -> 2, "absorb" -> 4))
+    assert(jobs == want, s"text gate jobs per batch and phase moved: $jobs")
+    assert(spark.sparkContext.getLocalProperty(Gate.PhaseProperty) == null,
+      "process left its phase tag on the caller's thread")
   }
 
   test("embed gate: an id delivered twice in one batch is one hit and one index row") {
