@@ -102,11 +102,15 @@ object BenchCorpus {
         gateTbl("bench_kmv"), gateTbl("bench_cms"),
         gateTbl("bench_psample"),
         s"graft_pairs_lsh_$digest", s"graft_pairs_srp_$digest",
-        s"graft_cc_lsh_$digest", s"graft_cc_srp_$digest",
         // round-21: the BM25 inverted index is saved tables now
         s"graft_bm25_tf_$digest", s"graft_bm25_dl_$digest",
         s"graft_bm25_df_$digest", s"graft_bm25_nt_$digest"))
       try spark.sql(s"DROP TABLE IF EXISTS $t")
+      catch { case _: Throwable => () }
+    // the label tables live in generation directories a bare DROP TABLE
+    // leaves behind (Writers.replaceGenerational)
+    for (t <- Seq(s"graft_cc_lsh_$digest", s"graft_cc_srp_$digest"))
+      try graft.sources.Writers.dropWithLocation(spark, t)
       catch { case _: Throwable => () }
     graft.operators.Similarity.dropArtifacts(spark, sf1Dir)
     graft.streaming.AnnIngest.dropRebuild(spark, sf1Dir)

@@ -251,7 +251,7 @@ object Dedup {
     val key = s"$kind|$d|$fp"
     val table = clusterIndexCache.computeIfAbsent(key, _ => {
       val name = s"graft_cc_${kind}_${graft.sources.Writers.tableDigest(d)}"
-      graft.sources.Writers.replaceBucketed(s, build, "doc_id", PairIndexBuckets, name)
+      graft.sources.Writers.replaceGenerational(s, build, "doc_id", PairIndexBuckets, name)
       name
     })
     // same fresh-session self-heal as pairIndex: a table name memoized
@@ -319,10 +319,10 @@ object Dedup {
     // index is CC over this pair table, so an append makes it stale.
     // Only its CATALOG ENTRY goes: clusterIndex's self-heal sees
     // tableExists == false and rebuilds from the updated pairs on the
-    // next label read (through replaceBucketed, which clears the old
-    // location then), while a label frame taken before this append
-    // keeps reading the files it listed. Gate-private pair tables
-    // (non-graft_pairs_* names) derive no label index.
+    // next label read, into a fresh generation directory
+    // (replaceGenerational), while a label frame taken before this
+    // append keeps reading the files it listed. Gate-private pair
+    // tables (non-graft_pairs_* names) derive no label index.
     if (table.startsWith("graft_pairs_"))
       graft.sources.Writers.dropCatalogEntry(
         s, table.replaceFirst("^graft_pairs_", "graft_cc_"))

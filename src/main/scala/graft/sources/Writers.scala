@@ -67,37 +67,63 @@ object Writers {
   }
 
   /** Drop the catalog entry AND its (possibly orphaned) warehouse
-    * directory. Package-visible: rename-swap maintenance (e.g. the ANN
+    * directories — the managed one and every [[replaceGenerational]]
+    * generation. Package-visible: rename-swap maintenance (e.g. the ANN
     * rebuild) must clear a PREVIOUS JVM's orphaned target location —
     * this session's in-memory catalog has no entry for it, so a bare
     * DROP TABLE IF EXISTS is a no-op while ALTER ... RENAME still
     * validates the location as free. */
   private[graft] def dropWithLocation(
       s: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS ${quoted(table)}")
-    val whUri = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-    val whPath =
-      if (whUri.getScheme == null) whUri.getPath else new java.io.File(whUri).getPath
-    new scala.reflect.io.Directory(new java.io.File(whPath, table)).deleteRecursively()
-    ()
+    dropCatalogEntry(s, table)
+    val wh = warehouseDir(s)
+    (new java.io.File(wh, table) +: generations(wh, table).map(_._2))
+      .foreach(new scala.reflect.io.Directory(_).deleteRecursively())
   }
 
-  /** Drop a saved table's catalog entry but leave its files: frames
-    * already resolved against the table keep reading the files they
-    * listed, and the next [[replaceBucketed]] of the name clears the
-    * location before it writes. The entry is made EXTERNAL first,
-    * because dropping a managed table deletes its directory. */
+  /** [[replaceBucketed]] for a table that frames taken earlier may still
+    * read: each version is written as an EXTERNAL table into a fresh
+    * generation directory, `<warehouse>/<table>.g<n>`. Dropping the
+    * catalog entry (a plain DROP TABLE) leaves an external table's files,
+    * so a frame resolved against the replaced version keeps reading it
+    * while this call writes the next one. The replaced generation is
+    * kept; older ones are deleted here, so a frame reads across one
+    * replacement, not two. */
+  private[graft] def replaceGenerational(
+      s: org.apache.spark.sql.SparkSession,
+      df: DataFrame, key: String, buckets: Int, table: String): Unit = {
+    dropCatalogEntry(s, table)
+    val wh = warehouseDir(s)
+    new scala.reflect.io.Directory(new java.io.File(wh, table)).deleteRecursively()
+    val old = generations(wh, table)
+    val next = old.lastOption.fold(1L)(_._1 + 1)
+    df.write.bucketBy(buckets, key).sortBy(key)
+      .option("path", new java.io.File(wh, s"$table.g$next").getPath)
+      .mode("overwrite").saveAsTable(table)
+    old.dropRight(1).foreach(g => new scala.reflect.io.Directory(g._2).deleteRecursively())
+  }
+
+  /** Drop a table's catalog entry. The files of an EXTERNAL table
+    * ([[replaceGenerational]]) stay, so frames already resolved against
+    * it keep reading them. */
   private[graft] def dropCatalogEntry(
-      s: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
-    val catalog = s.sessionState.catalog
-    val id = TableIdentifier(table)
-    if (catalog.tableExists(id)) {
-      catalog.alterTable(
-        catalog.getTableMetadata(id).copy(tableType = CatalogTableType.EXTERNAL))
-      s.sql(s"DROP TABLE IF EXISTS ${quoted(table)}")
-    }
+      s: org.apache.spark.sql.SparkSession, table: String): Unit =
+    s.sql(s"DROP TABLE IF EXISTS ${quoted(table)}")
+
+  /** The [[replaceGenerational]] directories of `table`, oldest first. */
+  private def generations(wh: String, table: String): Seq[(Long, java.io.File)] = {
+    val prefix = s"$table.g"
+    Option(new java.io.File(wh).listFiles()).toSeq.flatten.flatMap { f =>
+      val n = f.getName.stripPrefix(prefix)
+      if (f.getName.startsWith(prefix) && n.nonEmpty && n.forall(_.isDigit))
+        Some(n.toLong -> f)
+      else None
+    }.sortBy(_._1)
+  }
+
+  private def warehouseDir(s: org.apache.spark.sql.SparkSession): String = {
+    val whUri = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
+    if (whUri.getScheme == null) whUri.getPath else new java.io.File(whUri).getPath
   }
 
   /** Backtick-quote a table identifier for raw-SQL interpolation —

@@ -167,22 +167,17 @@ object DedupGate {
   /** The ids of the one-column frame `ids` (distinct by construction),
     * collected iff there are at most [[MaxVerifyIds]] of them (the limit
     * bounds the transfer BEFORE the driver materializes anything);
-    * None = over the cap. */
-  private[streaming] def idsCapped(ids: DataFrame): Option[Seq[Long]] = {
-    val got = ids.limit(MaxVerifyIds + 1).collect().map(_.getLong(0)).toSeq
-    if (got.size <= MaxVerifyIds) Some(got) else None
-  }
-
-  /** [[idsCapped]] for the verify stage's candidate ids; None = over
-    * the cap, caller must take the join-based verify path. */
+    * None = over the cap, caller must take the join-based verify path. */
   private def collectIdsCapped(ids: DataFrame): Option[Seq[Long]] = {
-    val got = idsCapped(ids)
-    if (got.isEmpty)
+    val got = ids.limit(MaxVerifyIds + 1).collect().map(_.getLong(0)).toSeq
+    if (got.size <= MaxVerifyIds) Some(got)
+    else {
       log.warn(s"gate verify: > $MaxVerifyIds distinct candidate ids — " +
         "falling back to join-based verify (one corpus-content pass this " +
         "batch). Persistent storms mean the banding admits too much: switch " +
         "to a stricter EmbedBanding or widen text bands.")
-    got
+      None
+    }
   }
 
   /** Corpus snapshot pre-processed for the text gate: shingle content
@@ -205,6 +200,17 @@ object DedupGate {
     def setsForJoin(idsDf: DataFrame): DataFrame =
       perDocSets(Gate.contentForJoin(sh, table, ShCols, idsDf))
 
+    /** Fold admitted docs in so later batches see them: shingled and
+      * MinHashed here. The gate absorbs from what its verify already
+      * built instead (the two-argument form). */
+    def absorb(admittedDocs: DataFrame): TextIndex = {
+      import graft.functions.TextFunctions.shingleSet
+      val sets = shingleSet(admittedDocs, "doc_id", "text").localCheckpoint(true)
+      val next = absorb(sets, Dedup.lshBands(Dedup.minhashSignatures(shingleRows(sets))))
+      unpersistCheckpoints(sets)
+      next
+    }
+
     /** Fold admitted docs in so later batches see them, from what
       * verify already built: `sets` — their (doc_id, shingles) arrays —
       * and `newBands` — their band rows. Nothing is shingled or
@@ -214,7 +220,7 @@ object DedupGate {
       * `sets`. The band increment is checkpointed eagerly either way,
       * so the caller can drop the frames it came from. */
     def absorb(sets: DataFrame, newBands: DataFrame): TextIndex = {
-      val rows = sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
+      val rows = shingleRows(sets)
       TextIndex(
         Gate.appendContent(sh, if (table.isDefined) rows else rows.localCheckpoint(true),
           table, "doc_id"),
@@ -232,6 +238,10 @@ object DedupGate {
 
   /** The text content columns; `doc_id` keys the content table. */
   private val ShCols = Seq("doc_id", "shingle")
+
+  /** (doc_id, shingles) arrays back to (doc_id, shingle) content rows. */
+  private def shingleRows(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
   /** (doc_id, shingle) content rows grouped to one (doc_id, shingles)
     * array per document — the rows are distinct per doc, so the array
@@ -294,8 +304,7 @@ object DedupGate {
     // the new-docs shingle sets feed bands, both verify sides and the
     // absorb — same materialize-once rationale as qMinhashLsh
     val setNew = shingleSet(newDocs, "doc_id", "text").localCheckpoint(false)
-    val bandsNew = Dedup.lshBands(Dedup.minhashSignatures(
-        setNew.select(col("doc_id"), explode(col("shingles")).as("shingle"))))
+    val bandsNew = Dedup.lshBands(Dedup.minhashSignatures(shingleRows(setNew)))
       .localCheckpoint(false) // feeds the corpus join, the self-join and the absorb
     val candCorpus = bandsNew
       .join(corpus.bands.select(col("doc_id").as("dup_of"),
@@ -347,8 +356,16 @@ object DedupGate {
         Dedup.jaccard(size(array_intersect(col("a"), col("b"))),
           size(col("a")), size(col("b"))).as("jaccard"))
       .filter(col("jaccard") >= Dedup.JaccardThreshold)
+    // absorb: the rejected ids are at most the batch's rows, so one
+    // small collect filters both frames — a left-anti join per frame
+    // costs a shuffle or broadcast each
     Gate.Verified(result, Seq(setNew, bandsNew, candByB) ++ setCandScratch,
-      admit => corpus.absorb(admit(setNew), admit(bandsNew)))
+      Some { rej =>
+        val ids = rej.collect().map(_.getLong(0)).toSeq
+        def admitted(f: DataFrame) =
+          f.filter(col("doc_id").isNull || !col("doc_id").isin(ids: _*))
+        corpus.absorb(admitted(setNew), admitted(bandsNew))
+      })
   }
 
   def duplicates(newDocs: DataFrame, corpusDocs: DataFrame): DataFrame =
@@ -772,7 +789,7 @@ object DedupGate {
       // the candidate-id collect already materialized
       batchN = batch.count()
       monitor.observe(candCount(), batchN, corpusN)
-      Gate.Verified(dups, scratch, admit => index.absorb(admit(batch)))
+      Gate.Verified(dups, scratch)
     }
 
     // admitted = batch minus the distinct flagged ids

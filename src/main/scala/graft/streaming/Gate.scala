@@ -61,6 +61,8 @@ object Gate {
   /** The index an [[Absorbing]] gate grows: immutable, each step returns
     * the next value. */
   trait Index[I] {
+    /** Fold admitted rows in so later batches see them. */
+    def absorb(admitted: DataFrame): I
     /** The union arms collapsed into one checkpointed frame each — pure:
       * the receiver stays valid until its [[arms]] are unpersisted. */
     def collapsed: I
@@ -71,16 +73,16 @@ object Gate {
     def remount(content: DataFrame): I
   }
 
-  /** What [[Absorbing.verify]] returns for one batch: the verdicts; the
-    * checkpoints this call created, which the verdict plan and `absorb`
-    * read (dropped once the batch is done); and `absorb(admit)`, the
-    * next index with the batch's admitted rows folded in, where `admit`
-    * keeps the rows of an id-keyed frame whose id the verdicts did not
-    * reject. A gate that already built the index rows of the batch
-    * while verifying (the text gate's shingle sets and band rows)
-    * absorbs those instead of building them again. */
+  /** What [[Absorbing.verify]] returns for one batch: the verdicts and
+    * the checkpoints this call created, which the verdict plan (and
+    * `absorb`) read, dropped once the batch is done. The skeleton
+    * absorbs the admitted batch rows through [[Index.absorb]]; a gate
+    * that already built the batch's index rows while verifying (the
+    * text gate's shingle sets and band rows) supplies `absorb(rejected)`
+    * instead — the next index from those rows less the ids of the
+    * `rejected` frame ([[Absorbing.rejected]]). */
   final case class Verified[I](verdicts: DataFrame, scratch: Seq[DataFrame],
-      absorb: (DataFrame => DataFrame) => I)
+      absorb: Option[DataFrame => I] = None)
 
   /** The local property naming the [[Absorbing.process]] phase that
     * launched a job — `batch`, `verify`, `verdict`, `sink`,
@@ -153,16 +155,6 @@ object Gate {
     /** Runs after the sink, replays included. */
     protected def afterSink(batch: DataFrame, verdicts: DataFrame): Unit = ()
 
-    /** The `admit` filter for ids `rej`: a bounded driver collect
-      * replayed as a NOT IN filter, so absorbing several frames costs no
-      * join each; over [[DedupGate.MaxVerifyIds]] rejected ids, a
-      * left-anti join. Null ids are never rejected, as in the join. */
-    private def admission(rej: DataFrame): DataFrame => DataFrame =
-      DedupGate.idsCapped(rej.select(col(idCol)).distinct()) match {
-        case Some(ids) => _.filter(col(idCol).isNull || !col(idCol).isin(ids: _*))
-        case None => _.join(rej, Seq(idCol), "left_anti")
-      }
-
     def process(df: DataFrame, id: Long, sink: (DataFrame, Long) => Unit): Unit = {
       val sc = df.sparkSession.sparkContext
       val callerPhase = sc.getLocalProperty(PhaseProperty)
@@ -177,7 +169,10 @@ object Gate {
         phase("sink")(sink(verdicts, id))
         phase("after_sink")(afterSink(batch, verdicts))
         if (absorbedBatches.add(id)) {
-          phase("absorb") { idx = v.absorb(admission(rejected(verdicts))) }
+          phase("absorb") {
+            val rej = rejected(verdicts)
+            idx = v.absorb.fold(idx.absorb(batch.join(rej, Seq(idCol), "left_anti")))(_(rej))
+          }
           absorbsSinceCollapse += 1
           if (absorbsSinceCollapse >= collapseEvery) phase("collapse") {
             val old = idx

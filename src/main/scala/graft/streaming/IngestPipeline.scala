@@ -100,7 +100,7 @@ object IngestPipeline {
 
     protected def verify(batch: DataFrame): Gate.Verified[SpanGate.SpanIndex] = {
       val (verdicts, scratch) = verdictsWithScratch(batch, lm, index)
-      Gate.Verified(verdicts, scratch, admit => index.absorb(admit(batch)))
+      Gate.Verified(verdicts, scratch)
     }
   }
 

@@ -177,7 +177,7 @@ object SpanGate {
       extends NoveltyGate(corpusDocs, collapseEvery, corpusTable) {
     protected def verify(batch: DataFrame): Gate.Verified[SpanIndex] = {
       val (verdicts, scratch) = noveltyWithScratch(batch, index)
-      Gate.Verified(verdicts, scratch, admit => index.absorb(admit(batch)))
+      Gate.Verified(verdicts, scratch)
     }
   }
 

@@ -82,13 +82,13 @@ class GateSkeletonSpec extends SparkSpec {
     spark.conf.set(aqe, "false")
     val jobs = try { textGateJobs("warm"); textGateJobs("pinned") }
       finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
-    // 17 and 18 in all (18 and 19 before the set-intersection verify);
+    // 16 and 17 in all (18 and 19 before the set-intersection verify);
     // no collapse in two batches
     val want = Seq(
       Map("batch" -> 1, "verify" -> 5, "verdict" -> 4, "sink" -> 1,
-        "after_sink" -> 2, "absorb" -> 4),
+        "after_sink" -> 2, "absorb" -> 3),
       Map("batch" -> 1, "verify" -> 6, "verdict" -> 4, "sink" -> 1,
-        "after_sink" -> 2, "absorb" -> 4))
+        "after_sink" -> 2, "absorb" -> 3))
     assert(jobs == want, s"text gate jobs per batch and phase moved: $jobs")
     assert(spark.sparkContext.getLocalProperty(Gate.PhaseProperty) == null,
       "process left its phase tag on the caller's thread")

@@ -172,6 +172,19 @@ class TextGateVerifySpec extends SparkSpec {
     runGate("disk", disk = true)
   }
 
+  test("Index.absorb of admitted docs (no verify frames) equals the fresh build") {
+    val newDocs = batches.head.filterNot(d => corpusWords.contains(d._1))
+    val docs = newDocs.toDF("doc_id", "text")
+    val corpus = corpusWords.toSeq.map { case (id, ws) => (id, text(ws)) }
+      .toDF("doc_id", "text")
+    val idx = DedupGate.indexCorpus(corpus).absorb(docs)
+    val ids = newDocs.map(_._1)
+    val freshRows = TextFunctions.shingles(docs, "doc_id", "text")
+    assert(rowsOf(idx.sh.filter(col("doc_id").isin(ids: _*))) == rowsOf(freshRows))
+    assert(rowsOf(idx.bands.filter(col("doc_id").isin(ids: _*))) ==
+      rowsOf(Dedup.lshBands(Dedup.minhashSignatures(freshRows))))
+  }
+
   test("over-cap join fallback, memory and disk: same hits, same absorbs") {
     withCap(1) {
       runGate("mem_cap", disk = false)
