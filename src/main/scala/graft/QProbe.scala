@@ -14,8 +14,30 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_PLAN_DIR=/root/repo/plans/r20 \
   *   sbt "runMain graft.QProbe q_pagerank q_bm25_rm3 ..."
   * With no args, probes every query (timing only).
+  *
+  * Per query it also prints what the timed passes spent compiling:
+  * Janino compiles, generated classes and Janino milliseconds from
+  * Spark's [[org.apache.spark.metrics.source.CodegenMetrics]], and JIT
+  * compiler milliseconds from the JVM's `CompilationMXBean`. A query
+  * whose timed passes still compile has classes the codegen cache
+  * (100 entries) evicted between its calls.
   */
 object QProbe {
+  import org.apache.spark.metrics.source.CodegenMetrics
+
+  /** Cumulative compile cost: (Janino compiles, generated classes,
+    * Janino ms, JIT ms). Janino ms is the exact sum while the
+    * histogram's reservoir still holds every sample, else mean x
+    * count. */
+  private def compileCost(): (Long, Long, Double, Long) = {
+    val t = CodegenMetrics.METRIC_COMPILATION_TIME
+    val snap = t.getSnapshot
+    val ms = if (snap.size >= t.getCount) snap.getValues.sum.toDouble
+      else snap.getMean * t.getCount
+    (t.getCount, CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount, ms,
+      java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -71,6 +93,7 @@ object QProbe {
     }
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val out = new StringBuilder("{")
+    val codegen = new StringBuilder("{")
     var first = true
     for (n <- names; fn <- SparkEntry.queries.get(n)) {
       spark.sparkContext.setJobDescription(n)
@@ -90,20 +113,29 @@ object QProbe {
           System.err.println(s"[qprobe] $n plan dump failed: ${e.getMessage}")
         }
       }
+      val (c0, k0, ms0, jit0) = compileCost()
       val samples = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
         (System.nanoTime() - t0) / 1e9
       }.sorted
+      val (c1, k1, ms1, jit1) = compileCost()
       System.gc()
       val med = samples(samples.size / 2)
-      if (!first) out ++= ","
+      if (!first) { out ++= ","; codegen ++= "," }
       first = false
       out ++= s""""$n":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(med))}"""
-      println(s"[qprobe] $n median=${"%.3f".format(med)} samples=${samples.map("%.3f".format(_)).mkString(",")}")
+      val cost = String.format(java.util.Locale.ROOT,
+        "\"compiles\":%d,\"classes\":%d,\"compile_ms\":%.1f,\"jit_ms\":%d",
+        Long.box(c1 - c0), Long.box(k1 - k0), Double.box(ms1 - ms0), Long.box(jit1 - jit0))
+      codegen ++= s""""$n":{$cost}"""
+      println(s"[qprobe] $n median=${"%.3f".format(med)} samples=${samples.map("%.3f".format(_)).mkString(",")}" +
+        s" (timed passes) janino_compiles=${c1 - c0} generated_classes=${k1 - k0}" +
+        s" janino_ms=${"%.1f".format(ms1 - ms0)} jit_ms=${jit1 - jit0}")
     }
     out ++= "}"
-    println(s"""{"metric":"qprobe","queries":${out.toString},"reps":$reps,"sf":"$sfDir"}""")
+    codegen ++= "}"
+    println(s"""{"metric":"qprobe","queries":${out.toString},"codegen":${codegen.toString},"reps":$reps,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog for the harness star schema + events/documents/
   * embeddings tables (see TESTDATA.md / FIXTURES.md §B).
@@ -18,7 +19,36 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** Inferred schema per table: (canonical path, the session's
+    * `nanosAsLong` value) -> (file fingerprint, schema). Inference is a
+    * footer-reading Spark job per read; a table whose files are
+    * unchanged has the same schema, so every later read passes it via
+    * `.schema(...)` and launches none. A rewritten table changes its
+    * fingerprint and is inferred again, replacing the entry. The
+    * `nanosAsLong` value is in the key because it changes how a
+    * TIMESTAMP(NANOS) column decodes ([[events]] branches on it). */
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (String, StructType)]()
+
+  /** `spark.read.parquet(path)` with the schema inferred once per
+    * [[schemaMemo]] entry. Inference runs outside the map's bin lock:
+    * two racing first reads may both infer, and the later put wins
+    * with the same schema. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path).getCanonicalFile
+    val key = (f.getPath,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    val fp = graft.sources.Writers.fileFingerprint(f.getParent, f.getName)
+    val schema = Option(schemaMemo.get(key)).filter(_._1 == fp).map(_._2)
+      .getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemaMemo.put(key, (fp, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -145,6 +175,6 @@ object Tables {
         .write.mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+    readParquet(s, path)
   }
 }

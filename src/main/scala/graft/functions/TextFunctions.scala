@@ -57,6 +57,11 @@ object TextFunctions {
     tokenRows(df, idCol, textCol, n)
       .select(col(idCol), shingleArray(n).as("shingles"))
 
+  /** [[shingleSet]]'s arrays back to (idCol, shingle) rows — the rows
+    * [[shingles]] yields for the same input. */
+  def shingleRows(sets: DataFrame, idCol: String): DataFrame =
+    sets.select(col(idCol), explode(col("shingles")).as("shingle"))
+
   private def tokenRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol), tokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= n)

@@ -91,15 +91,14 @@ object Dedup {
 
   /** The Jaccard of two shingle sets from the shared count and the two
     * set sizes, |A∩B| / (|A| + |B| - |A∩B|) as a double — the ONE
-    * definition of the verify formula. Batch callers pass counts, the
-    * streaming gate array sizes; the double is the same either way.
-    * The threshold stays a separate filter on the named column so the
-    * batch plans keep their `jaccard >= 0.5` predicate unchanged. */
-  private[graft] def jaccard(shared: Column, na: Column, nb: Column): Column =
+    * definition of the verify formula. The exact path passes counts,
+    * [[verifySets]] array sizes; the double is the same either way.
+    * The threshold stays a separate filter on the named column. */
+  private def jaccard(shared: Column, na: Column, nb: Column): Column =
     shared.cast(DoubleType) / (na + nb - shared)
 
   /** shared-counts + per-doc set sizes -> Jaccard >= 0.5 pairs, the
-    * verify step of the exact path and the LSH path. */
+    * verify step of the exact path. */
   private def jaccardOnPairs(shared: DataFrame, sizes: DataFrame): DataFrame =
     shared
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
@@ -108,6 +107,18 @@ object Dedup {
         jaccard(col("shared"), col("na"), col("nb")).as("jaccard"))
       .filter(col("jaccard") >= JaccardThreshold)
       .orderBy(col("doc_a"), col("doc_b"))
+
+  /** Set-intersection verify — the ONE verify of the LSH query and the
+    * streaming text gate: `pairs` carries one shingle array per side
+    * (`a`, `b`); out come the two ids, `shared` = |a ∩ b| as a Long,
+    * and [[jaccard]], filtered at [[JaccardThreshold]]. Each array is
+    * a document's distinct shingles, so its size is the set size. */
+  private[graft] def verifySets(pairs: DataFrame, idA: Column, idB: Column): DataFrame = {
+    val shared = size(array_intersect(col("a"), col("b")))
+    pairs.select(idA, idB, shared.cast(LongType).as("shared"),
+        jaccard(shared, size(col("a")), size(col("b"))).as("jaccard"))
+      .filter(col("jaccard") >= JaccardThreshold)
+  }
 
   // ----------------------------------------------------------- MinHash+LSH
 
@@ -136,12 +147,6 @@ object Dedup {
         col("bb.band_hash").as("band_hash"))
   }
 
-  /** MinHash+LSH near-dup: candidates from band-bucket self-join,
-    * verified with exact Jaccard on the candidate set only. Output
-    * shape matches qNgramJaccard; at the harness SF the deterministic
-    * murmur3 signatures give full recall on every planted pair, which
-    * is asserted by the oracle (and the recall/precision trade is
-    * documented at the band parameters above). */
   /** Candidate pairs from the band-bucket self-join over a shingle
     * set — exposed so Bench can record the candidate count against
     * the all-pairs count at every scale point (the measured pruning
@@ -156,20 +161,28 @@ object Dedup {
       .distinct()
   }
 
+  /** MinHash+LSH near-dup: each document is shingled once into its
+    * shingle-set array ([[shingleSet]]); the explode of those arrays
+    * feeds the signatures and the band-bucket self-join, and the
+    * distinct candidate pairs are verified by [[verifySets]] — exact
+    * Jaccard by set intersection of the two arrays, on the candidate
+    * set only. Output shape matches qNgramJaccard; at the harness SF
+    * the deterministic murmur3 signatures give full recall on every
+    * planted pair, which is asserted by the oracle (and the
+    * recall/precision trade is documented at the band parameters
+    * above). */
   def qMinhashLsh(s: SparkSession, d: String): DataFrame = {
-    // four uses of the shingle set (signatures, shared x2, sizes) —
+    // three uses of the shingle sets (signatures, both verify sides) —
     // materialized once; see qNgramJaccard for the reuse rationale
-    val sh = shingles(Tables.documents(s, d), "doc_id", "text")
+    val sets = shingleSet(Tables.documents(s, d), "doc_id", "text")
       .localCheckpoint(false)
-    val candidates = minhashCandidates(sh)
-    // exact verification restricted to candidates: join the shingle
-    // sets of both sides and count the intersection
-    val shared = candidates
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    jaccardOnPairs(shared, shingleSizes(sh))
+    def side(id: String, arr: String) =
+      sets.select(col("doc_id").as(id), col("shingles").as(arr))
+    verifySets(minhashCandidates(shingleRows(sets, "doc_id"))
+        .join(side("doc_a", "a"), "doc_a")
+        .join(side("doc_b", "b"), "doc_b"),
+      col("doc_a"), col("doc_b"))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Index-build-once: the near-dup pair set for a corpus snapshot is

@@ -35,11 +35,12 @@ import graft.Tables
   * float PageRank carries the same magnitude of error, just
   * non-deterministically.
   *
-  * Scale shape: the edge frame (with out-degrees attached) is built
-  * once and checkpointed; each of the [[PrIterations]] rounds is one
-  * equi-join (ranks ⋈ edges on src — co-partitioned after round 1
-  * because both sides hash on the same key) plus one shuffle of
-  * per-edge contributions keyed by dst with map-side partial sums.
+  * Scale shape: the edge frame (with out-degrees attached), the node
+  * count and the initial ranks are built once and checkpointed; each
+  * of the [[PrIterations]] rounds is one equi-join (ranks ⋈ edges on
+  * src — co-partitioned after round 1 because both sides hash on the
+  * same key) plus one shuffle of per-edge contributions keyed by dst
+  * with map-side partial sums.
   * Per-round cost is O(|E|/cores); rank state is O(|V|). The node
   * count enters as a ONE-ROW broadcast scalar (the late-split window
   * pattern), not a driver constant, so the plan stays fully
@@ -79,22 +80,23 @@ object Graph {
       .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst")))
   }
 
-  /** Build-once memo for the prepared edge frame, keyed by corpus dir
-    * — the pair-index convention ([[Dedup]]): a production pipeline
-    * builds the graph once and iterates/queries it repeatedly, so
-    * repeat calls in one JVM reuse the checkpointed (src, dst, outdeg)
-    * frame instead of re-running the fact-table edge build. A frame
+  /** Build-once memo for PageRank's start state ([[Start]]), keyed by
+    * corpus dir — the pair-index convention ([[Dedup]]): a production
+    * pipeline builds the graph once and iterates/queries it repeatedly,
+    * so repeat calls in one JVM reuse the checkpointed (src, dst,
+    * outdeg) frame, node count and initial ranks instead of re-running
+    * the fact-table edge build and the two start-state jobs. A state
     * from a stopped/replaced session is rebuilt, not trusted; a
     * replaced entry's checkpoint blocks are reclaimed DEFERRED (memo
     * reference dropped, ContextCleaner unpersists on GC) — never
     * eagerly, because a concurrent caller may still be iterating the
-    * stale lineage-free frame. Staleness: alongside the frame we
-    * memoize a filesystem
-    * fingerprint (name, length, mtime of the two fact tables' files);
-    * a regenerated directory changes the fingerprint and forces a
-    * rebuild instead of returning ranks over vanished data. */
+    * stale lineage-free frames. Staleness: alongside the state we
+    * memoize a filesystem fingerprint (name, length, mtime of the two
+    * fact tables' files); a regenerated directory changes the
+    * fingerprint and rebuilds edges, count and ranks together instead
+    * of returning ranks over vanished data. */
   private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, DataFrame)]()
+    String, (String, Start)]()
 
   /** Fingerprint of the fact-table files feeding [[edges]] — driver
     * filesystem metadata only, no Spark job. */
@@ -106,11 +108,11 @@ object Graph {
     * (node, kind, pr_micro) — integer micro-units, exact. */
   def qPageRank(s: SparkSession, d: String): DataFrame = {
     val fp = factFingerprint(d)
-    val ed = edgeMemo.compute(d, (_, cur) =>
-      if (cur != null && cur._1 == fp && (cur._2.sparkSession eq s)) cur
+    val st = edgeMemo.compute(d, (_, cur) =>
+      if (cur != null && cur._1 == fp && (cur._2.edges.sparkSession eq s)) cur
       else
-        // the stale frame is NOT eagerly unpersisted: a concurrent
-        // qPageRank on another thread may still be iterating it, and
+        // the stale frames are NOT eagerly unpersisted: a concurrent
+        // qPageRank on another thread may still be iterating them, and
         // a local checkpoint has no lineage to recompute from — an
         // eager unpersist fails that in-flight job with lost-block
         // errors (round-12 advice). Dropping the memo reference is
@@ -118,36 +120,45 @@ object Graph {
         // they finish, after which the ContextCleaner reclaims the
         // blocks on GC (the deferred-reclaim mechanism the bench's
         // per-query System.gc() already leans on).
-        (fp, prepare(edges(s, d)).localCheckpoint(true)))
-    iterate(ed._2)
+        (fp, start(edges(s, d), eager = true)))
+    iterate(st._2)
   }
 
-  /** (src, dst, outdeg), built ONCE into a checkpoint — the node set,
-    * node count, and all rounds derive from it, so the upstream edge
-    * build (a fact-table join at 100 TB) is never re-executed.
-    * localCheckpoint over persist(+repartition(src)) is a MEASURED
-    * call, not a default: the cache-with-partitioning variant makes
-    * every round's edge join exchange-free on paper, but the columnar
-    * cache's encode/decode per round cost more than the saved
+  /** What every round reads and the inputs fix: (src, dst, outdeg)
+    * edges, the one-row node count `n` (column `n_nodes`) and the
+    * initial ranks `init` (node, pr). */
+  private final case class Start(edges: DataFrame, n: DataFrame, init: DataFrame)
+
+  /** The [[Start]] of an edge frame, each part checkpointed — the node
+    * set, node count and all rounds derive from the edge checkpoint,
+    * so the upstream edge build (a fact-table join at 100 TB) is never
+    * re-executed. localCheckpoint over persist(+repartition(src)) is a
+    * MEASURED call, not a default: the cache-with-partitioning variant
+    * makes every round's edge join exchange-free on paper, but the
+    * columnar cache's encode/decode per round cost more than the saved
     * exchanges in an A/B at sf0.01 (16.3 s vs 12.4 s cold) — the
-    * checkpointed RDD is read back raw. */
-  private def prepare(e: DataFrame): DataFrame = {
+    * checkpointed RDD is read back raw. The node count is a one-row
+    * frame broadcast into each round, not a driver constant, so the
+    * plan stays fully distributed at any graph size. */
+  private def start(e: DataFrame, eager: Boolean): Start = {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    e.join(deg, "src")
+    val ed = e.join(deg, "src").localCheckpoint(eager)
+    val n = ed.agg(count_distinct(col("src")).as("n_nodes")).localCheckpoint(eager)
+    val init = ed.select(col("src").as("node")).distinct()
+      .crossJoin(broadcast(n))
+      .select(col("node"), expr(s"${PrMassMicro}L div n_nodes").as("pr"))
+      .localCheckpoint(eager)
+    Start(ed, n, init)
   }
 
   /** [[qPageRank]]'s core over any (src, dst) edge frame whose edge
     * set is symmetric (every node must have at least one out-edge —
     * the no-dangling precondition the symmetric closure guarantees). */
   private[graft] def pageRank(e: DataFrame): DataFrame =
-    iterate(prepare(e).localCheckpoint(false))
+    iterate(start(e, eager = false))
 
-  private def iterate(ed: DataFrame): DataFrame = {
-    // node count as a one-row broadcast scalar, kept IN the plan
-    val n = ed.agg(count_distinct(col("src")).as("n_nodes"))
-    val init = ed.select(col("src").as("node")).distinct()
-      .crossJoin(broadcast(n))
-      .select(col("node"), expr(s"${PrMassMicro}L div n_nodes").as("pr"))
+  private def iterate(st: Start): DataFrame = {
+    val Start(ed, n, init) = st
     val last = (1 to PrIterations).foldLeft(init) { (ranks, i) =>
       // ONE equi-join + ONE dst-keyed aggregation per round (round-20
       // optimization pass). The edge set is SYMMETRIC (class doc), so

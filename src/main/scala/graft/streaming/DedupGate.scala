@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
+import graft.functions.TextFunctions.shingleRows
 import graft.operators.Dedup
 
 /** STREAMING dedup gates — the online-ingestion form of the near-dup
@@ -44,7 +45,7 @@ import graft.operators.Dedup
   * Candidates come from equi-joins on the band key against a SLIM
   * index (3 ints per corpus band). Exact verification (Jaccard by set
   * intersection of per-document shingle arrays / two-stage cosine, the
-  * shared [[Dedup.jaccard]] / [[Dedup.cosineVerify]] helpers so gate
+  * shared [[Dedup.verifySets]] / [[Dedup.cosineVerify]] helpers so gate
   * and batch semantics cannot drift) needs the CONTENT — shingle sets /
   * vectors — of candidate dup_of docs only. Holding that content as
   * cluster-memory frames and
@@ -206,7 +207,8 @@ object DedupGate {
     def absorb(admittedDocs: DataFrame): TextIndex = {
       import graft.functions.TextFunctions.shingleSet
       val sets = shingleSet(admittedDocs, "doc_id", "text").localCheckpoint(true)
-      val next = absorb(sets, Dedup.lshBands(Dedup.minhashSignatures(shingleRows(sets))))
+      val next = absorb(sets,
+        Dedup.lshBands(Dedup.minhashSignatures(shingleRows(sets, "doc_id"))))
       unpersistCheckpoints(sets)
       next
     }
@@ -220,7 +222,7 @@ object DedupGate {
       * `sets`. The band increment is checkpointed eagerly either way,
       * so the caller can drop the frames it came from. */
     def absorb(sets: DataFrame, newBands: DataFrame): TextIndex = {
-      val rows = shingleRows(sets)
+      val rows = shingleRows(sets, "doc_id")
       TextIndex(
         Gate.appendContent(sh, if (table.isDefined) rows else rows.localCheckpoint(true),
           table, "doc_id"),
@@ -238,10 +240,6 @@ object DedupGate {
 
   /** The text content columns; `doc_id` keys the content table. */
   private val ShCols = Seq("doc_id", "shingle")
-
-  /** (doc_id, shingles) arrays back to (doc_id, shingle) content rows. */
-  private def shingleRows(sets: DataFrame): DataFrame =
-    sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
   /** (doc_id, shingle) content rows grouped to one (doc_id, shingles)
     * array per document — the rows are distinct per doc, so the array
@@ -271,9 +269,9 @@ object DedupGate {
     * from (a) the new-bands x corpus-bands join and (b) the new-bands
     * self-join (higher id flagged as the newcomer — keep-lowest-id),
     * then exact Jaccard >= 0.5 verified ONCE per pair by set
-    * intersection of the two shingle arrays ([[Dedup.jaccard]] and
-    * [[Dedup.JaccardThreshold]], the one definition of formula and
-    * threshold). Output (new_doc, dup_of, jaccard), pair-unique.
+    * intersection of the two shingle arrays ([[Dedup.verifySets]], the
+    * one verify the LSH query shares). Output (new_doc, dup_of,
+    * jaccard), pair-unique.
     *
     * The dup_of side of verification draws from corpus content for ids
     * the corpus holds (a re-ingested id is verified against its CORPUS
@@ -302,9 +300,9 @@ object DedupGate {
   private def verifyText(newDocs: DataFrame, corpus: TextIndex): Gate.Verified[TextIndex] = {
     import graft.functions.TextFunctions.shingleSet
     // the new-docs shingle sets feed bands, both verify sides and the
-    // absorb — same materialize-once rationale as qMinhashLsh
+    // absorb — materialized once
     val setNew = shingleSet(newDocs, "doc_id", "text").localCheckpoint(false)
-    val bandsNew = Dedup.lshBands(Dedup.minhashSignatures(shingleRows(setNew)))
+    val bandsNew = Dedup.lshBands(Dedup.minhashSignatures(shingleRows(setNew, "doc_id")))
       .localCheckpoint(false) // feeds the corpus join, the self-join and the absorb
     val candCorpus = bandsNew
       .join(corpus.bands.select(col("doc_id").as("dup_of"),
@@ -349,13 +347,11 @@ object DedupGate {
       }
     val setB = setCorpusCand.unionAll(
       setNew.join(setCorpusCand.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-    val result = cand
-      .join(setNew.select(col("doc_id").as("doc_a"), col("shingles").as("a")), "doc_a")
-      .join(setB.select(col("doc_id").as("doc_b"), col("shingles").as("b")), "doc_b")
-      .select(col("doc_a").as("new_doc"), col("doc_b").as("dup_of"),
-        Dedup.jaccard(size(array_intersect(col("a"), col("b"))),
-          size(col("a")), size(col("b"))).as("jaccard"))
-      .filter(col("jaccard") >= Dedup.JaccardThreshold)
+    val result = Dedup.verifySets(cand
+        .join(setNew.select(col("doc_id").as("doc_a"), col("shingles").as("a")), "doc_a")
+        .join(setB.select(col("doc_id").as("doc_b"), col("shingles").as("b")), "doc_b"),
+      col("doc_a").as("new_doc"), col("doc_b").as("dup_of"))
+      .select(col("new_doc"), col("dup_of"), col("jaccard"))
     // absorb: the rejected ids are at most the batch's rows, so one
     // small collect filters both frames — a left-anti join per frame
     // costs a shuffle or broadcast each
