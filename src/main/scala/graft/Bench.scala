@@ -38,7 +38,7 @@ object Bench {
     "q_report_agg", "q_minhash_lsh", "q_embed_neardup",
     "q_embed_neardup_lsh", "q_embed_neardup_strict", "q10_returned_items")
 
-  // Queries that pay a one-time memoized build per dir (centroid
+  // Queries that pay a one-time graft.Artifacts build per dir (centroid
   // training, LSH/SRP pair index, derived partsupp, edge checkpoint,
   // BM25 inverted index). Warmed once before the measured reps —
   // see the builder-warmup block in main().
@@ -65,8 +65,8 @@ object Bench {
     "q_perplexity", // capped bigram LM (TextAnalysis.bigramLm — round-20
     // train-once memo; q_ppl_buckets/q_ppl_cutoffs mount it)
     "q_perplexity3", // capped trigram backoff stack (TextAnalysis.trigramLm)
-    "q_quality_clf", // trained classifier weights (QualityClf.weightsMemo, "pool")
-    "q_quality_clf_drift") // %4-split classifier weights (QualityClf.gateWeightsMemo, "m4")
+    "q_quality_clf", // trained classifier weights (QualityClf.trainedWeightsMemo)
+    "q_quality_clf_drift") // %4-split classifier weights (QualityClf.gateWeightsMemo)
 
   // Locale.ROOT: a comma-decimal default locale must not corrupt the
   // single-JSON-line driver contract

@@ -92,7 +92,7 @@ object BenchCorpus {
     val sf1Dir = sf1Path.toString
     new scala.reflect.io.Directory(sf1Path.toFile).deleteRecursively()
     // q9 derives a partsupp for the (temp-named) sf1 dir — drop files
-    // AND the JVM memo together
+    // AND its registry entry together
     Tables.dropPartsupp(sf1Dir)
     val digest = graft.sources.Writers.tableDigest(sf1Dir)
     def gateTbl(kind: String): String =

@@ -21,32 +21,19 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquet(spark, s"$dir/$name.parquet")
 
-  /** Inferred schema per table: (canonical path, the session's
-    * `nanosAsLong` value) -> (file fingerprint, schema). Inference is a
-    * footer-reading Spark job per read; a table whose files are
-    * unchanged has the same schema, so every later read passes it via
-    * `.schema(...)` and launches none. A rewritten table changes its
-    * fingerprint and is inferred again, replacing the entry. The
-    * `nanosAsLong` value is in the key because it changes how a
-    * TIMESTAMP(NANOS) column decodes ([[events]] branches on it). */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, StructType)]()
-
   /** `spark.read.parquet(path)` with the schema inferred once per
-    * [[schemaMemo]] entry. Inference runs outside the map's bin lock:
-    * two racing first reads may both infer, and the later put wins
-    * with the same schema. */
+    * [[Artifacts]] entry. Inference is a footer-reading Spark job; a
+    * table whose files are unchanged has the same schema, so later
+    * reads pass it via `.schema(...)` and launch none. The key holds
+    * the canonical path and the session's `nanosAsLong` value, which
+    * changes how a TIMESTAMP(NANOS) column decodes ([[events]]
+    * branches on it); the fingerprint is the table's files. */
   private def readParquet(spark: SparkSession, path: String): DataFrame = {
     val f = new java.io.File(path).getCanonicalFile
-    val key = (f.getPath,
-      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
-    val fp = graft.sources.Writers.fileFingerprint(f.getParent, f.getName)
-    val schema = Option(schemaMemo.get(key)).filter(_._1 == fp).map(_._2)
-      .getOrElse {
-        val inferred = spark.read.parquet(path).schema
-        schemaMemo.put(key, (fp, inferred))
-        inferred
-      }
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val schema = Artifacts.get[StructType]("tables.schema", s"${f.getPath}|$nanos",
+      graft.sources.Writers.fileFingerprint(f.getParent, f.getName))(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 
@@ -100,9 +87,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  private val partsuppCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** On-disk location of the derived partsupp table for a scale-factor
     * dir. Outside the (read-only) testdata tree; the oracle SQL reads
     * the same files by absolute path, so Spark and DuckDB always see
@@ -120,13 +104,13 @@ object Tables {
     s"/root/repo/data/partsupp/${f.getName}_${graft.sources.Writers.tableDigest(f.getPath)}"
   }
 
-  /** Drop the JVM memo AND the on-disk files for a dir's derived
+  /** Drop the registry entry AND the on-disk files for a dir's derived
     * partsupp — for callers that delete the underlying corpus (the
-    * bench's temp sf1 dir): a retained memo over deleted files would
+    * bench's temp sf1 dir): a retained entry over deleted files would
     * make a later same-JVM partsupp() call return an empty path. */
   def dropPartsupp(d: String): Unit = {
     val p = partsuppPath(d)
-    partsuppCache.remove(p)
+    Artifacts.forget("tables.partsupp", p)
     new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively()
     ()
   }
@@ -145,16 +129,19 @@ object Tables {
     *  - attributes are pure key arithmetic (exact in both engines):
     *    ps_availqty  = (p*4 + s) mod 9999 + 1,
     *    ps_supplycost = ((p*7 + s*13) mod 90000)/100 + 1.
-    * Built once per JVM per dir (computeIfAbsent blocks concurrent
-    * callers), overwritten on first touch so a formula change never
-    * leaves a stale table behind; both engines then READ the same
-    * parquet, so no cross-engine arithmetic is involved in the table
-    * itself. At 100 TB this materialization step is the same pattern
+    * Built once per JVM per dir and source fingerprint (lineitem,
+    * part, supplier — a rewritten source rebuilds it), overwritten on
+    * first touch so a formula change never leaves a stale table
+    * behind; both engines then READ the same parquet, so no
+    * cross-engine arithmetic is involved in the table itself. At 100 TB this materialization step is the same pattern
     * as the pair index: one distinct-shuffle over the fact table's
     * (part, supp) pairs, written bucketed next to the warehouse. */
   def partsupp(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val path = partsuppCache.computeIfAbsent(partsuppPath(d), { p =>
+    val p = partsuppPath(d)
+    val fp = Seq("lineitem", "part", "supplier")
+      .map(t => graft.sources.Writers.fileFingerprint(d, s"$t.parquet")).mkString(";")
+    val path = Artifacts.get("tables.partsupp", p, fp) {
       val nSupp = supplier(s, d).count() // bounded scalar: |supplier|
       val step = nSupp / 4 + 1
       val pairs = lineitem(s, d)
@@ -174,7 +161,7 @@ object Tables {
             .cast("double") / 100.0 + 1.0).as("ps_supplycost"))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     readParquet(s, path)
   }
 }

@@ -205,21 +205,16 @@ object QualityClf {
         pX1e6("z").as("p_x1e6"),
         when(pX1e6("z") >= AdmitMinPX1e6, 1L).otherwise(0L).as("admit"))
 
-  /** Build-once memo for the whole-pool trained weights, keyed by
-    * corpus dir — the [[TextAnalysis]] dsirWeightsMemo convention:
-    * one training run serves every whole-pool consumer (the score
-    * query and the eval row). Fingerprint + session guards; stale
-    * entries reclaimed DEFERRED (ContextCleaner), never eagerly. */
-  private val weightsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, DataFrame)]()
-
+  /** Trained weights of one model `kind` over a corpus, built once
+    * per corpus snapshot as a [[graft.Artifacts]] entry: one training
+    * run serves every consumer of that model (the score query and the
+    * eval row for the whole pool). A frame from another session is
+    * rebuilt. */
   private def memoizedWeights(s: SparkSession, d: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val fp = graft.sources.Writers.fileFingerprint(d, "documents.parquet")
-    weightsMemo.compute(s"$kind|$d", (_, cur) =>
-      if (cur != null && cur._1 == fp && (cur._2.sparkSession eq s)) cur
-      else (fp, build))._2
-  }
+      build: => DataFrame): DataFrame =
+    graft.Artifacts.getValid[DataFrame](s"qclf.$kind", d,
+      graft.sources.Writers.fileFingerprint(d, "documents.parquet"),
+      _.sparkSession eq s)(build)
 
   private def trainedWeightsMemo(s: SparkSession, d: String): DataFrame =
     memoizedWeights(s, d, "pool")(train(Tables.documents(s, d)))

@@ -84,14 +84,16 @@ object Retrieval {
     * the corpus so one bucket stays executor-sized. */
   val Bm25Buckets = 8
 
-  /** Build-once memo for the inverted index, keyed by corpus dir —
-    * the [[graft.operators.Dedup]] pair-index convention: a search
-    * deployment builds its inverted index once and serves every query
-    * against it, so the three hybrid consumers (and repeat qBm25
-    * calls) reuse one build; q_bm25's FIRST call is the measured
-    * builder (bench memoized_build/build_cost attribution).
+  /** The inverted index, built once per corpus snapshot as an
+    * [[graft.Artifacts]] entry keyed by dir and the documents
+    * fingerprint: a search deployment builds its inverted index once
+    * and serves every query against it, so the three hybrid consumers
+    * (and repeat qBm25 calls) reuse one build; q_bm25's FIRST call is
+    * the measured builder (bench memoized_build/build_cost
+    * attribution). A hit whose tables the session's catalog lacks is
+    * rebuilt.
     *
-    * Round-21 (VERDICT r20 #2, guide §2.4/§6): the index is now SAVED
+    * Round-21 (VERDICT r20 #2, guide §2.4/§6): the index is SAVED
     * BUCKETED TABLES (the gate-corpus pattern), not per-JVM
     * localCheckpoint blocks. tf and dl are bucketed AND in-bucket
     * sorted by doc_id with tasks aligned 1:1 to buckets (one file per
@@ -103,21 +105,14 @@ object Retrieval {
     * no corpus-sized shuffle per query at any scale. df is only ever
     * read through the bounded query-term restriction and broadcast;
     * nt is one row — both plain saved tables. */
-  private val indexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (String, String, String, String))]()
-
-  /** Filesystem fingerprint of the documents table (driver metadata
-    * only — the [[graft.operators.Similarity.embFingerprint]]
-    * convention): a regenerated corpus forces an index rebuild. */
   private def bm25Index(s: SparkSession, d: String): Bm25Index = {
-    val fp = graft.sources.Writers.fileFingerprint(d, "documents.parquet")
     val dig = graft.sources.Writers.tableDigest(d)
-    def build(): (String, String, String, String) = {
-      val names = (s"graft_bm25_tf_$dig", s"graft_bm25_dl_$dig",
-        s"graft_bm25_df_$dig", s"graft_bm25_nt_$dig")
+    val names = Seq("tf", "dl", "df", "nt").map(t => s"graft_bm25_${t}_$dig")
+    graft.Artifacts.getValid[Unit]("bm25.index", d,
+      graft.sources.Writers.fileFingerprint(d, "documents.parquet"),
+      _ => names.forall(s.catalog.tableExists)) {
       // the token fan-out feeds all four builds — one checkpoint,
-      // reclaimed DEFERRED (ContextCleaner on GC), never eagerly —
-      // the Graph edge-memo race rationale
+      // reclaimed deferred (graft.Artifacts), never eagerly
       val docTok = Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .localCheckpoint(false)
@@ -133,29 +128,20 @@ object Retrieval {
       graft.sources.Writers.replaceBucketed(s,
         byDoc.groupBy(col("doc_id"), col("term"))
           .agg(count(lit(1)).as("tf")),
-        "doc_id", Bm25Buckets, names._1)
+        "doc_id", Bm25Buckets, names(0))
       graft.sources.Writers.replaceBucketed(s,
         byDoc.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
-        "doc_id", Bm25Buckets, names._2)
+        "doc_id", Bm25Buckets, names(1))
       graft.sources.Writers.replaceTable(s,
         docTok.select(col("doc_id"), col("term")).distinct()
-          .groupBy(col("term")).agg(count(lit(1)).as("df")), names._3)
+          .groupBy(col("term")).agg(count(lit(1)).as("df")), names(2))
       // N docs and T total tokens as a 1-row broadcast scalar
       graft.sources.Writers.replaceTable(s,
         docTok.agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("t_toks")), names._4)
-      names
+          count(lit(1)).as("t_toks")), names(3))
     }
-    val (_, names) = indexMemo.compute(d, (_, cur) =>
-      if (cur != null && cur._1 == fp) cur else (fp, build()))
-    // fresh-session self-heal (the pairIndex discipline): table names
-    // memoized against a stopped session's catalog must rebuild
-    if (!Seq(names._1, names._2, names._3, names._4)
-        .forall(s.catalog.tableExists)) {
-      indexMemo.remove(d)
-      bm25Index(s, d)
-    } else Bm25Index(s.table(names._1), s.table(names._2),
-      s.table(names._3), s.table(names._4))
+    val t = names.map(s.table)
+    Bm25Index(t(0), t(1), t(2), t(3))
   }
 
   /** BM25 top-[[TopK]] per text query. Output:

@@ -150,17 +150,13 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Memoized corpus count per (dir, fingerprint) — the one scalar
-    * every derived serving knob starts from. A parquet count is a
-    * footer-only job, but the ANN family reads it many times per
-    * suite; the fingerprint key invalidates on regeneration exactly
-    * like the artifact memos. */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.lang.Long]()
-
+  /** Corpus count as a [[graft.Artifacts]] entry per (dir,
+    * fingerprint) — the one scalar every derived serving knob starts
+    * from. A parquet count is a footer-only job, but the ANN family
+    * reads it many times per suite. */
   private[graft] def corpusCount(s: SparkSession, d: String): Long =
-    countCache.computeIfAbsent((d, embFingerprint(d)),
-      _ => Tables.embeddings(s, d).count()).longValue
+    graft.Artifacts.get("embeddings.count", d, embFingerprint(d))(
+      Tables.embeddings(s, d).count())
 
   /** Exact brute-force cosine top-K for the derived query set. */
   def qKnnBrute(s: SparkSession, d: String): DataFrame = knnBrute(s, d, 1)
@@ -318,27 +314,6 @@ object Similarity {
       .select(col("cent_id"), col("cent_e"),
         norm2Exact(col("cent_e")).as("cent_n2"))
 
-  /** Index-build-once, search-many: the trained centroid set for a
-    * given table is deterministic (fixed seed, fixed rounds, fixed-
-    * point math), so it is memoized per (path, iters, corpus
-    * fingerprint) as collected rows — exactly how a production ANN
-    * index treats its coarse quantizer (train offline, reuse across
-    * queries). The cache holds at most ~[[TargetCells]] rows of dim
-    * floats — O(k), independent of corpus size — rebuilt as a local
-    * DataFrame on use.
-    *
-    * RESTART PERSISTENCE (the [[graft.streaming.QualityGate.trainLmDisk]]
-    * convention): behind the JVM memo sits a digest-keyed saved table.
-    * A miss first tries to MOUNT the table — valid when its embedded
-    * corpus fingerprint matches the filesystem — and only trains when
-    * no valid artifact exists, writing one for the next session. At
-    * 100 TB the codebook/centroid build is exactly the work a restart
-    * must never redo; floats round-trip parquet bit-exactly, so the
-    * mounted artifact IS the trained one ([[AnnPersistSpec]] proves
-    * mount-without-retrain and fingerprint invalidation). */
-  private val centCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), Array[org.apache.spark.sql.Row]]()
-
   /** Artifact schema revision: bumped when the TRAINING
     * parameterization changes (round-20: derived cells/nprobe/
     * shortlist replaced the fixed knobs), so a saved table trained
@@ -383,37 +358,65 @@ object Similarity {
     }
 
   /** Save a trained artifact with the fingerprint embedded per row,
-    * then read it back — what the memo holds is by construction what
-    * any later session will mount. */
+    * then read it back — what the registry holds is by construction
+    * what any later session will mount. */
   private def saveArtifact(s: SparkSession, art: DataFrame, table: String,
       fp: String): Array[org.apache.spark.sql.Row] = {
     graft.sources.Writers.replaceTable(s, art.withColumn("fp", lit(fp)), table)
     s.table(table).drop("fp").collect()
   }
 
-  private[graft] def trainedCentroids(s: SparkSession, d: String, iters: Int = KMeansIters): DataFrame = {
+  /** A trained ANN artifact of saved-table kind `kind`
+    * ([[annTableName]]) — index-build-once, search-many: training is
+    * deterministic (fixed seed, fixed rounds, fixed-point math), so
+    * the artifact is a [[graft.Artifacts]] entry per (dir, embeddings
+    * fingerprint) of collected rows, exactly how a production ANN
+    * index treats its quantizers (train offline, reuse across
+    * queries). Every artifact is O(k) rows, independent of corpus
+    * size, rebuilt as a local DataFrame of `schema` on use.
+    *
+    * RESTART PERSISTENCE (the [[graft.streaming.QualityGate.trainLmDisk]]
+    * convention): behind the entry sits a digest-keyed saved table. A
+    * miss first tries to MOUNT the table — valid when its embedded
+    * corpus fingerprint matches the filesystem — and only trains when
+    * no valid artifact exists, writing one for the next session. At
+    * 100 TB the codebook/centroid build is exactly the work a restart
+    * must never redo; floats round-trip parquet bit-exactly, so the
+    * mounted artifact IS the trained one ([[AnnPersistSpec]] proves
+    * mount-without-retrain and fingerprint invalidation). `train`
+    * returns the artifact frame and the checkpointed frames to
+    * unpersist once it is saved. */
+  private def trainedArtifact(s: SparkSession, d: String, kind: String,
+      schema: StructType)(train: => (DataFrame, Seq[DataFrame])): DataFrame = {
     val fp = embFingerprint(d)
-    val rows = centCache.computeIfAbsent((d, iters, fp), _ => {
-      val table = annTableName(s"ivf$iters", d)
+    val rows = graft.Artifacts.get(s"trained.$kind", d, fp) {
+      val table = annTableName(kind, d)
       mountArtifact(s, table, fp).getOrElse {
-        val cent = trainCentroids(withNorm(Tables.embeddings(s, d)), iters)
-        val got = saveArtifact(s, cent, table, fp)
-        graft.streaming.DedupGate.unpersistCheckpoints(cent)
+        val (art, scratch) = train
+        val got = saveArtifact(s, art, table, fp)
+        graft.streaming.DedupGate.unpersistCheckpoints(scratch: _*)
         got
       }
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cent_id", LongType),
-        org.apache.spark.sql.types.StructField("cent_e", ArrayType(FloatType)),
-        org.apache.spark.sql.types.StructField("cent_n2", DoubleType))))
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Test hook: forget the in-JVM artifact memos, simulating a process
-    * restart — the next call must mount from the saved tables. */
-  private[graft] def clearArtifactMemos(): Unit = {
-    centCache.clear(); pqCache.clear(); pcaCache.clear()
-  }
+  /** Row schema of a trained PQ, residual-PQ or OPQ codebook. */
+  private val codebookSchema = StructType(Seq(
+    StructField("cent_id", LongType), StructField("cent_e", ArrayType(FloatType))))
+
+  /** The trained coarse quantizer (IVF centroids). */
+  private[graft] def trainedCentroids(s: SparkSession, d: String, iters: Int = KMeansIters): DataFrame =
+    trainedArtifact(s, d, s"ivf$iters",
+      codebookSchema.add(StructField("cent_n2", DoubleType))) {
+      val cent = trainCentroids(withNorm(Tables.embeddings(s, d)), iters)
+      (cent, Seq(cent))
+    }
+
+  /** Test hook: forget the in-JVM trained artifacts, simulating a
+    * process restart — the next call must mount from the saved tables. */
+  private[graft] def clearArtifactMemos(): Unit =
+    graft.Artifacts.forgetKinds(_.startsWith("trained."))
 
   /** Drop the saved ANN artifact tables for a corpus dir (bench/temp
     * hygiene — a temp-named sf1 dir would otherwise accrete one
@@ -431,8 +434,8 @@ object Similarity {
   // assignment and the PQ/residual/OPQ code tables (what FAISS IVFPQ
   // keeps on disk). The encode passes are corpus-deterministic given
   // the trained artifacts, so each is materialized ONCE per (corpus,
-  // fingerprint) as a saved table (the Dedup.pairIndex convention —
-  // no driver rows, consumers read a distributed scan) instead of
+  // fingerprint) as a saved-table graft.Artifacts entry (no driver
+  // rows, consumers read a distributed scan) instead of
   // re-running the broadcast-argmax map pass over the full corpus in
   // EVERY search/recall/hybrid query (measured: the encode passes were
   // ~half of each PQ-family query's steady cost at sf0.1). Bench
@@ -444,23 +447,11 @@ object Similarity {
   // validation keeps the read path a plain scan; production publishes
   // the code table with the corpus snapshot (the gate-corpus pattern).
   // ------------------------------------------------------------------
-  private val servingCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), String]()
-
   private def servingTable(s: SparkSession, d: String, kind: String)(
       build: => DataFrame): DataFrame = {
-    val key = (d, kind, embFingerprint(d))
-    val table = servingCache.computeIfAbsent(key, _ => {
-      val name = annTableName(s"srv_$kind", d)
-      graft.sources.Writers.replaceTable(s, build, name)
-      name
-    })
-    // fresh-session self-heal (the pairIndex discipline): a table name
-    // memoized by a stopped session's catalog must rebuild
-    if (!s.catalog.tableExists(table)) {
-      servingCache.remove(key)
-      servingTable(s, d, kind)(build)
-    } else s.table(table)
+    val name = annTableName(s"srv_$kind", d)
+    graft.Artifacts.table(s, s"serving.$kind", d, embFingerprint(d), name)(
+      graft.sources.Writers.replaceTable(s, build, name))
   }
 
   /** (vec_id, cell): the coarse-quantizer assignment of every corpus
@@ -779,31 +770,13 @@ object Similarity {
     cent
   }
 
-  /** Codebooks are deterministic -> memoized per (path, subspace,
-    * corpus fingerprint), like the IVF coarse quantizer: train
-    * offline, reuse across queries. At most PqK rows of PqSubDim
-    * floats each. Behind the memo sits the same digest-keyed saved
-    * table as [[trainedCentroids]] — a restart mounts the codebook
-    * instead of retraining it. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), Array[org.apache.spark.sql.Row]]()
-
-  private[graft] def pqCodebook(s: SparkSession, d: String, m: Int): DataFrame = {
-    val fp = embFingerprint(d)
-    val rows = pqCache.computeIfAbsent((d, m, fp), _ => {
-      val table = annTableName(s"pq$m", d)
-      mountArtifact(s, table, fp).getOrElse {
-        val cb = pqTrain(pqSub(Tables.embeddings(s, d), m))
-        val got = saveArtifact(s, cb, table, fp)
-        graft.streaming.DedupGate.unpersistCheckpoints(cb)
-        got
-      }
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cent_id", LongType),
-        org.apache.spark.sql.types.StructField("cent_e", ArrayType(FloatType)))))
-  }
+  /** The PQ codebook of subspace `m` — a [[trainedArtifact]] like the
+    * IVF coarse quantizer: at most PqK rows of PqSubDim floats. */
+  private[graft] def pqCodebook(s: SparkSession, d: String, m: Int): DataFrame =
+    trainedArtifact(s, d, s"pq$m", codebookSchema) {
+      val cb = pqTrain(pqSub(Tables.embeddings(s, d), m))
+      (cb, Seq(cb))
+    }
 
   /** PQ encode — the oracle-checkable code surface: (vec_id, m, code).
     * Assignment is the zero-shuffle broadcast-codebook argmax; at
@@ -1013,27 +986,15 @@ object Similarity {
         zip_with(col("ce"), col("cent_e"), (x, c) =>
           (x.cast(DoubleType) - c.cast(DoubleType)).cast(FloatType)).as("embedding"))
 
-  /** Residual PQ codebooks — trained on (v − centroid) slices, saved
-    * behind the same digest-keyed restart path as the plain codebooks
-    * (kind `pqr<m>`). */
-  private[graft] def pqrCodebook(s: SparkSession, d: String, m: Int): DataFrame = {
-    val fp = embFingerprint(d)
-    val rows = pqCache.computeIfAbsent((d + "#res", m, fp), _ => {
-      val table = annTableName(s"pqr$m", d)
-      mountArtifact(s, table, fp).getOrElse {
-        val en = withNorm(Tables.embeddings(s, d))
-        val res = residualFrame(en, trainedCentroids(s, d)).localCheckpoint(false)
-        val cb = pqTrain(pqSub(res, m))
-        val got = saveArtifact(s, cb, table, fp)
-        graft.streaming.DedupGate.unpersistCheckpoints(cb, res)
-        got
-      }
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cent_id", LongType),
-        org.apache.spark.sql.types.StructField("cent_e", ArrayType(FloatType)))))
-  }
+  /** Residual PQ codebooks — trained on (v − centroid) slices, a
+    * [[trainedArtifact]] like the plain codebooks (kind `pqr<m>`). */
+  private[graft] def pqrCodebook(s: SparkSession, d: String, m: Int): DataFrame =
+    trainedArtifact(s, d, s"pqr$m", codebookSchema) {
+      val en = withNorm(Tables.embeddings(s, d))
+      val res = residualFrame(en, trainedCentroids(s, d)).localCheckpoint(false)
+      val cb = pqTrain(pqSub(res, m))
+      (cb, Seq(cb, res))
+    }
 
   /** RESIDUAL-encoded IVF-PQ — the full FAISS IVFPQ construction
     * (Jégou et al. 2011 §IV): PQ quantizes (v − centroid), whose
@@ -1184,44 +1145,28 @@ object Similarity {
       .orderBy(col("comp"), col("pos"))
 
   /** Trained top-2 PCA basis (comp ∈ {1,2}; pos, v, norm_shifted) —
-    * memoized behind the digest-keyed saved-table convention
-    * ([[trainedCentroids]] template, round-15/VERDICT r14 #5). The
-    * chain is corpus-deterministic (fixed unroll, exact integers), so
-    * the 2·d-row artifact is trained ONCE per corpus and every family
+    * a [[trainedArtifact]] (round-15/VERDICT r14 #5). The chain is
+    * corpus-deterministic (fixed unroll, exact integers), so the
+    * 2·d-row basis is trained ONCE per corpus and every family
     * member ([[qPcaPower]]/[[qPcaBasis]]/[[qWhiten]]/[[qPcaProject]])
     * mounts it — previously the suite re-ran the power chains 6×.
     * At 100 TB the two full-corpus power iterations are exactly the
     * work a restart (or a sibling query) must never redo. */
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Array[org.apache.spark.sql.Row]]()
-
-  private[graft] def trainedPcaBasis(s: SparkSession, d: String): DataFrame = {
-    val fp = embFingerprint(d)
-    val rows = pcaCache.computeIfAbsent((d, fp), _ => {
-      val table = annTableName("pca", d)
-      mountArtifact(s, table, fp).getOrElse {
-        // xq's checkpoint blocks are reclaimed by the ContextCleaner
-        // when the plan is GC'd — an eager async unpersist here races
-        // the multi-job execution (broadcast subtrees materialize the
-        // checkpoint before the main job reads it; qWhiten reproduced
-        // the CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND failure).
-        val (xq, dim) = pcaInput(s, d)
-        val v1 = powerChain(s, xq, dim, None, PcaShift)
-        val v2 = powerChain(s, xq, dim, Some(v1), PcaShiftDeflated)
-        val basis = v1.select(lit(1L).as("comp"), col("pos"), col("v"),
-            col("norm_shifted"))
-          .unionAll(v2.select(lit(2L).as("comp"), col("pos"), col("v"),
-            col("norm_shifted")))
-        saveArtifact(s, basis, table, fp)
-      }
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("comp", LongType),
-        org.apache.spark.sql.types.StructField("pos", LongType),
-        org.apache.spark.sql.types.StructField("v", LongType),
-        org.apache.spark.sql.types.StructField("norm_shifted", LongType))))
-  }
+  private[graft] def trainedPcaBasis(s: SparkSession, d: String): DataFrame =
+    trainedArtifact(s, d, "pca", StructType(
+      Seq("comp", "pos", "v", "norm_shifted").map(StructField(_, LongType)))) {
+      // xq's checkpoint blocks are reclaimed by the ContextCleaner
+      // when the plan is GC'd — an eager async unpersist here races
+      // the multi-job execution (broadcast subtrees materialize the
+      // checkpoint before the main job reads it; qWhiten reproduced
+      // the CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND failure).
+      val (xq, dim) = pcaInput(s, d)
+      val v1 = powerChain(s, xq, dim, None, PcaShift)
+      val v2 = powerChain(s, xq, dim, Some(v1), PcaShiftDeflated)
+      (v1.select(lit(1L).as("comp"), col("pos"), col("v"), col("norm_shifted"))
+        .unionAll(v2.select(lit(2L).as("comp"), col("pos"), col("v"),
+          col("norm_shifted"))), Nil)
+    }
 
   /** Exact (uncentered) SECOND-MOMENT matrix M = Σ x·xᵀ over the
     * quantized embeddings, upper triangle — the d×d building block
@@ -1451,25 +1396,14 @@ object Similarity {
     * the 5x-rotated cold path was most of q_knn_opq's 9.6x
     * build-inclusive ratio at the 10x probe). */
   private[graft] def opqCodebook(s: SparkSession, d: String, m: Int,
-      rot: => DataFrame): DataFrame = {
-    val fp = embFingerprint(d)
-    val rows = pqCache.computeIfAbsent((d + "#opq", m, fp), _ => {
-      val table = annTableName(s"opq$m", d)
-      mountArtifact(s, table, fp).getOrElse {
-        val cb = pqTrain(pqSub(rot, m))
-        val got = saveArtifact(s, cb, table, fp)
-        // safe with the shared `rot`: pqTrain's per-iteration
-        // checkpoints truncate lineage, so cb's plan holds only the
-        // FINAL iteration's LogicalRDD — never the caller's rot
-        graft.streaming.DedupGate.unpersistCheckpoints(cb)
-        got
-      }
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cent_id", LongType),
-        org.apache.spark.sql.types.StructField("cent_e", ArrayType(FloatType)))))
-  }
+      rot: => DataFrame): DataFrame =
+    trainedArtifact(s, d, s"opq$m", codebookSchema) {
+      val cb = pqTrain(pqSub(rot, m))
+      // safe with the shared `rot`: pqTrain's per-iteration
+      // checkpoints truncate lineage, so cb's plan holds only the
+      // FINAL iteration's LogicalRDD — never the caller's rot
+      (cb, Seq(cb))
+    }
 
   /** OPQ search: PQ-ADC over the ROTATED codes (rotation is
     * orthogonal, so rotated inner products estimate the same ground
@@ -1490,12 +1424,12 @@ object Similarity {
       .localCheckpoint(false) // feeds all 4 subspace LUTs
     // ONE shared rotated-corpus thunk for all 4 codebook calls
     // (round-21, ADVICE r20): the codes-table call above makes these
-    // memo hits in the normal flow, but on any cold/healed path
+    // registry hits in the normal flow, but on any cold/healed path
     // (raced dropArtifacts, torn-artifact remount) a per-m fresh
     // `opqEmbeddings(...).localCheckpoint` would retrain each
     // subspace from its OWN full-corpus rotation pass — 4 rotations
     // where one checkpointed frame suffices. lazy: never evaluated
-    // on the memo-hit path.
+    // on the registry-hit path.
     lazy val rotCorpus = opqEmbeddings(s, d).localCheckpoint(false)
     val lut = (0 until PqM).map { m =>
       pqSub(rotQ, m)

@@ -847,21 +847,13 @@ object TextAnalysis {
     * join can broadcast it), so the three scoring queries
     * (q_perplexity / q_ppl_buckets / q_ppl_cutoffs) mount one trained
     * table instead of each re-running the word-count training shuffle
-    * + top-K per call. Keyed by the documents fingerprint; V (the
-    * train-split vocabulary size, a bounded scalar) rides the memo.
-    * q_perplexity is the bench's measured builder (memoized_build). */
-  // keyed by DIR with the fingerprint INSIDE the value (round-21,
-  // ADVICE r20 — the Graph.edgeMemo pattern): a regenerated corpus
-  // REPLACES its entry instead of accreting one ≤3x65536-row
-  // driver-resident model per superseded fingerprint in a long-lived
-  // JVM. At most one model per corpus dir is retained.
-  private val bigramLmMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Array[org.apache.spark.sql.Row], Long))]()
-
+    * + top-K per call. A [[graft.Artifacts]] entry per corpus dir with
+    * the documents fingerprint; V (the train-split vocabulary size, a
+    * bounded scalar) rides the entry. q_perplexity is the bench's
+    * measured builder (memoized_build). */
   private def bigramLm(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val fp = graft.sources.Writers.fileFingerprint(d, "documents.parquet")
-    val (rows, v) = bigramLmMemo.compute(d, (_, cur) =>
-      if (cur != null && cur._1 == fp) cur else (fp, {
+    val (rows, v) = graft.Artifacts.get("lm.bigram", d,
+      graft.sources.Writers.fileFingerprint(d, "documents.parquet")) {
       val docs = Tables.documents(s, d)
       val bg = bigramRows(docs, "doc_id", "text")
         .withColumn("split", splitFromBucket(md5Bucket16(col("doc_id"))))
@@ -874,7 +866,7 @@ object TextAnalysis {
         .agg(countDistinct(col("tok")).as("v"))
         .head.getLong(0)
       (bgc.collect(), vScalar)
-    }))._2
+    }
     import org.apache.spark.sql.types._
     val bgc = s.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(StructField("prev", StringType),
@@ -945,41 +937,32 @@ object TextAnalysis {
     * the trained stack instead of re-training per call. (The quality3
     * GATE keeps its own [[graft.streaming.QualityGate.trainLm3]] —
     * its train cost is the gate-start price that query measures.) */
-  // dir-keyed with in-value fingerprint, like bigramLmMemo above —
-  // superseded corpus generations are REPLACED, never accreted
-  private val trigramLmMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Array[org.apache.spark.sql.Row],
-      Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row],
-      Long, Long))]()
-
   private def trigramLm(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val fp = graft.sources.Writers.fileFingerprint(d, "documents.parquet")
-    val (tgcR, bgcR, uniR, nToks, v) =
-      trigramLmMemo.compute(d, (_, cur) =>
-        if (cur != null && cur._1 == fp) cur else (fp, {
-        val docs = Tables.documents(s, d)
-        val tgTrain = graft.functions.TextFunctions
-          .trigramRows(docs, "doc_id", "text")
-          .filter(splitFromBucket(md5Bucket16(col("doc_id"))) === "train")
-        val tgc = tgTrain
-          .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c_tri"))
-          .orderBy(col("c_tri").desc, col("w1"), col("w2"), col("w3"))
-          .limit(LmMaxBigrams)
-        val bgc = bigramRows(docs, "doc_id", "text")
-          .filter(splitFromBucket(md5Bucket16(col("doc_id"))) === "train")
-          .groupBy(col("prev"), col("w")).agg(count(lit(1)).as("c_pair"))
-          .orderBy(col("c_pair").desc, col("prev"), col("w")).limit(LmMaxBigrams)
-        val toksTrain = docs
-          .filter(splitFromBucket(md5Bucket16(col("doc_id"))) === "train")
-          .select(explode(tokens(col("text"))).as("tok"))
-        val uni = toksTrain.groupBy(col("tok")).agg(count(lit(1)).as("c_uni"))
-          .orderBy(col("c_uni").desc, col("tok")).limit(LmMaxBigrams)
-        val nvRow = toksTrain.agg(count(lit(1)).as("n_toks"),
-          countDistinct(col("tok")).as("v")).head
-        (tgc.collect(), bgc.collect(), uni.collect(),
-          nvRow.getLong(0), nvRow.getLong(1))
-      }))._2
+    val (tgcR, bgcR, uniR, nToks, v) = graft.Artifacts.get("lm.trigram", d,
+      graft.sources.Writers.fileFingerprint(d, "documents.parquet")) {
+      val docs = Tables.documents(s, d)
+      val tgTrain = graft.functions.TextFunctions
+        .trigramRows(docs, "doc_id", "text")
+        .filter(splitFromBucket(md5Bucket16(col("doc_id"))) === "train")
+      val tgc = tgTrain
+        .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c_tri"))
+        .orderBy(col("c_tri").desc, col("w1"), col("w2"), col("w3"))
+        .limit(LmMaxBigrams)
+      val bgc = bigramRows(docs, "doc_id", "text")
+        .filter(splitFromBucket(md5Bucket16(col("doc_id"))) === "train")
+        .groupBy(col("prev"), col("w")).agg(count(lit(1)).as("c_pair"))
+        .orderBy(col("c_pair").desc, col("prev"), col("w")).limit(LmMaxBigrams)
+      val toksTrain = docs
+        .filter(splitFromBucket(md5Bucket16(col("doc_id"))) === "train")
+        .select(explode(tokens(col("text"))).as("tok"))
+      val uni = toksTrain.groupBy(col("tok")).agg(count(lit(1)).as("c_uni"))
+        .orderBy(col("c_uni").desc, col("tok")).limit(LmMaxBigrams)
+      val nvRow = toksTrain.agg(count(lit(1)).as("n_toks"),
+        countDistinct(col("tok")).as("v")).head
+      (tgc.collect(), bgc.collect(), uni.collect(),
+        nvRow.getLong(0), nvRow.getLong(1))
+    }
     import org.apache.spark.sql.types._
     def local(rows: Array[org.apache.spark.sql.Row], schema: StructType) =
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
@@ -1606,28 +1589,16 @@ object TextAnalysis {
   private[graft] def dsirWeightFrame(docs: DataFrame): DataFrame =
     dsirScore(docs, dsirTrain(docs))
 
-  /** Build-once memo for the whole-pool weight frame, keyed by corpus
-    * dir — the [[graft.operators.Retrieval]] index-memo convention: a
-    * selection run scores the pool once and every consumer (weights
-    * report, top-K resample, shift audit) reads the same frame.
-    * Fingerprint + session guards and deferred reclamation follow
-    * [[graft.operators.Graph]]'s edge memo. */
-  private val dsirMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, DataFrame)]()
-
-  /** Filesystem fingerprint of the documents table (driver metadata
-    * only, the [[graft.operators.Similarity.embFingerprint]]
-    * convention): a regenerated corpus forces a re-score. */
-  private def dsirWeightsMemo(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.sources.Writers.fileFingerprint(d, "documents.parquet")
-    dsirMemo.compute(d, (_, cur) =>
-      if (cur != null && cur._1 == fp && (cur._2.sparkSession eq s)) cur
-      else
-        // stale entry reclaimed DEFERRED (ContextCleaner on GC), never
-        // eagerly — the Graph edge-memo race rationale
-        (fp, dsirWeightFrame(Tables.documents(s, d)).localCheckpoint(true)))
-      ._2
-  }
+  /** The whole-pool weight frame, checkpointed once per corpus
+    * snapshot as a [[graft.Artifacts]] entry: a selection run scores
+    * the pool once and every consumer (weights report, top-K resample,
+    * shift audit) reads the same frame. A frame from another session
+    * is rebuilt. */
+  private def dsirWeightsMemo(s: SparkSession, d: String): DataFrame =
+    graft.Artifacts.getValid[DataFrame]("dsir.weights", d,
+      graft.sources.Writers.fileFingerprint(d, "documents.parquet"),
+      _.sparkSession eq s)(
+      dsirWeightFrame(Tables.documents(s, d)).localCheckpoint(true))
 
   /** DSIR importance weights per document (plus the per-feature mean,
     * the length-normalized signal real pipelines threshold on). */

@@ -69,4 +69,36 @@ class PartsuppSpec extends SparkSpec {
     assert(plan.contains("StringContains(p_name,red)"),
       s"part LIKE filter not pushed to the scan:\n$plan")
   }
+
+  test("a rewritten lineitem rebuilds partsupp: its new (part, supp) pair appears") {
+    import java.nio.file.{Files, Paths}
+    val copy = Files.createTempDirectory("graft-ps-rewrite")
+    for (t <- Seq("lineitem", "part", "supplier"))
+      Files.copy(Paths.get(d, s"$t.parquet"), copy.resolve(s"$t.parquet"))
+    val c = copy.toString
+    try {
+      val before = Tables.partsupp(spark, c).select(col("ps_partkey"), col("ps_suppkey"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // a (part, supp) pair of existing keys that partsupp lacks
+      val parts = Tables.part(spark, c).select(col("p_partkey")).collect().map(_.getLong(0))
+      val supps = Tables.supplier(spark, c).select(col("s_suppkey")).collect().map(_.getLong(0))
+      val (p, q) = (for (p <- parts.sorted.iterator; q <- supps.sorted)
+        yield (p, q)).find(!before.contains(_)).get
+      // lineitem plus one row carrying the new pair, written aside and
+      // swapped in for the original files
+      val li = Tables.lineitem(spark, c)
+      li.unionByName(li.limit(1)
+          .withColumn("l_partkey", lit(p).cast(li.schema("l_partkey").dataType))
+          .withColumn("l_suppkey", lit(q).cast(li.schema("l_suppkey").dataType)))
+        .write.parquet(s"$c/lineitem_new.parquet")
+      Files.delete(Paths.get(s"$c/lineitem.parquet"))
+      Files.move(Paths.get(s"$c/lineitem_new.parquet"), Paths.get(s"$c/lineitem.parquet"))
+      val after = Tables.partsupp(spark, c)
+        .filter(col("ps_partkey") === p && col("ps_suppkey") === q).count()
+      assert(after == 1, s"partsupp missed the pair ($p, $q) of the rewritten lineitem")
+    } finally {
+      Tables.dropPartsupp(c)
+      new scala.reflect.io.Directory(copy.toFile).deleteRecursively()
+    }
+  }
 }

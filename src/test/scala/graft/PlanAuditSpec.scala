@@ -166,4 +166,18 @@ class PlanAuditSpec extends SparkSpec {
         s"$label distinct($keyCol) still shuffles despite bucketing:\n$distinctPlan")
     }
   }
+
+  test("artifact memos go through graft.Artifacts (no ConcurrentHashMap in operators or Tables)") {
+    // Every trained or derived artifact an operator reuses is held by
+    // the one registry, which builds outside any map lock, fingerprints
+    // every entry and replaces superseded ones. Source-level guard: a
+    // hand-rolled map under graft/operators/ or in Tables.scala would
+    // re-implement that policy on its own.
+    val sep = java.io.File.separator
+    val offenders = mainSources
+      .filter(p => p.toString.contains(s"${sep}graft${sep}operators$sep") ||
+        p.getFileName.toString == "Tables.scala")
+      .filter(p => slurp(p).contains("ConcurrentHashMap"))
+    assert(offenders.isEmpty, s"memo maps outside graft.Artifacts: $offenders")
+  }
 }
