@@ -133,9 +133,10 @@ object Tables {
     * part, supplier — a rewritten source rebuilds it), overwritten on
     * first touch so a formula change never leaves a stale table
     * behind; both engines then READ the same parquet, so no
-    * cross-engine arithmetic is involved in the table itself. At 100 TB this materialization step is the same pattern
-    * as the pair index: one distinct-shuffle over the fact table's
-    * (part, supp) pairs, written bucketed next to the warehouse. */
+    * cross-engine arithmetic is involved in the table itself. At
+    * 100 TB this materialization step is the same pattern as the pair
+    * index: one distinct-shuffle over the fact table's (part, supp)
+    * pairs, written bucketed next to the warehouse. */
   def partsupp(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val p = partsuppPath(d)
